@@ -130,8 +130,11 @@ object Bench {
     // stop the session BEFORE the contract lines: Spark's shutdown logging
     // must not interleave after the JSON in a merged stdout+stderr capture
     spark.stop()
-    // COMPACT summary first (total + artifact pointer) for consumers that
-    // keep only a bounded output tail and scan it line-by-line.
+    // COMPACT summary (total + artifact pointer) for humans reading the
+    // log. It prints BEFORE the two full-record lines below, so a reader
+    // that keeps only a bounded output tail never reaches it: such
+    // readers should grep the GRAFT_BENCH_JSON: sentinel or read the
+    // artifact file named in every line.
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_in_artifact":${names.length},"pass_ratio_max":$maxRatio,"artifact":"$outPath"}""")
     // Greppable sentinel carrying the FULL record (per-query map included)
     // for consumers that grep rather than tail.

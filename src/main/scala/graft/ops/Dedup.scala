@@ -35,15 +35,6 @@ object Dedup {
     * plan shape. */
   private[graft] var MaxBroadcastCandidatePairs: Long = 4L * 1000 * 1000
 
-  /** Measured rows/distinct-texts ratio at or above which the minhash
-    * band kernel runs on REP rows only (one extra semi-filtered text
-    * scan) instead of on every row (r19, VERDICT item 4). The kernel
-    * (shingling + bands×rowsPerBand hashes per shingle) costs ~20× a
-    * parquet text read per row, so the split pays from ~5% duplication;
-    * 1.25 keeps a safety margin for corpora where the extra read is
-    * the whole cost. `var` only so specs can exercise both shapes. */
-  private[graft] var RepOnlyKernelDupFactor: Double = 1.25
-
   /** Broadcast-hint `ids` when the measured candidate count is within
     * [[MaxBroadcastCandidatePairs]]; a negative count means "unknown"
     * (zero-cache variants have no cheap count) and keeps the hint —
@@ -178,8 +169,8 @@ object Dedup {
     * Input: (idCol, textCol). Output: (id_a, id_b, jaccard) with id_a < id_b
     * and jaccard >= threshold. bands × rowsPerBand hashes; defaults give
     * P(detect | j=0.8) ≈ 1 - (1-0.8³)^32 ≈ 1 - 2e-5 per pair.
-    */
-  /** The DEFAULT (`materialize = true`) is the shape the 100 TB plan
+    *
+    * The DEFAULT (`materialize = true`) is the shape the 100 TB plan
     * wants: the fixed-width (id, fp, bands) signature projection —
     * ~1-2% of the text bytes, the same frame [[signatures]] persists to
     * parquet — is auto-persisted (MEMORY_AND_DISK: the storage pool's
@@ -213,8 +204,7 @@ object Dedup {
     // GC-reclaimable, so before this release every default-shape call
     // stranded a signature-frame copy for the life of the session (the
     // r15 in-session decay: repeated bench executions squeezed the
-    // unified pool ~2× by pass 2). Callers wanting the lazy tail use
-    // [[minhashNearDupPairsReleasable]] and release themselves.
+    // unified pool ~2× by pass 2).
     if (!materialize) pairs
     else {
       val out = pairs.localCheckpoint(true)
@@ -223,29 +213,12 @@ object Dedup {
     }
   }
 
-  /** [[minhashNearDupPairs]] plus the `release` thunk that frees the
-    * cached signature frame and the candidate checkpoint — the PUBLIC
-    * cache-hygiene hook for long-lived sessions calling the default
-    * (materialize=true) shape repeatedly: without it the persisted
-    * frames stay parked until LRU eviction or app exit. Call `release`
-    * only after every consumer of the returned pairs has EAGERLY
-    * materialized (collected, written, or checkpointed) — the
-    * candidate checkpoint's lineage is truncated, so a released frame
-    * cannot be recomputed. Under materialize=false the thunk is a
-    * no-op. */
-  def minhashNearDupPairsReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, bands: Int = 32, rowsPerBand: Int = 3,
-      shingleN: Int = 3, maxBucketSize: Int = 10000,
-      materialize: Boolean = true): (DataFrame, () => Unit) =
-    minhashNearDupPairsImpl(df, idCol, textCol, threshold, bands,
-      rowsPerBand, shingleN, maxBucketSize, materialize)
-
   /** [[minhashNearDupPairs]] plus a `release` thunk that frees the
     * cached signature frame and the candidate checkpoint — callable
     * only after every consumer of the returned pairs has EAGERLY
-    * materialized (the candidate checkpoint's lineage is truncated). */
-  /** `edgesOnly = true` returns a CONNECTIVITY-EQUIVALENT edge set
+    * materialized (the candidate checkpoint's lineage is truncated).
+    *
+    * `edgesOnly = true` returns a CONNECTIVITY-EQUIVALENT edge set
     * instead of every near-dup pair: identical-text groups contribute a
     * STAR (rep → member, n-1 edges) instead of C(n,2) pairs, and
     * verified cross-group pairs stay at REP level instead of expanding
@@ -266,48 +239,33 @@ object Dedup {
 
     // Shuffle discipline, part 0: document bodies NEVER ride a shuffle.
     // The fingerprint and the band signature (primitive-array kernel
-    // expression; band index = array position) are both computed in
-    // narrow scan stages, so every downstream shuffle moves only ids,
+    // expression; band index = array position) are both computed in the
+    // narrow scan stage, so every downstream shuffle moves only ids,
     // 16-byte fingerprints, band triples, or candidate shingle sets —
     // at 100 TB the alternative (groupBy first(text)) is a full-corpus
-    // shuffle of raw text.
-    //
-    // r19 (VERDICT item 4): the fingerprint pass is SPLIT from the band
-    // kernel. The band self-join only ever consumes REP rows (one per
-    // distinct text — the r17 collapse), yet the r18 shape ran the
-    // expensive band kernel (shingling + bands×rowsPerBand hashes per
-    // shingle) on EVERY row and discarded duplicate rows' bands in the
-    // rep semi-join afterwards. Now the cheap md5 pass runs first, the
-    // duplication it measures gates the kernel placement, and on a
-    // duplicated corpus (the crawled shape) the kernel runs on reps
-    // only — at the 100× sf10 replication that is 1% of the rows.
-    val fps = base.select(col("id"), md5(col("text")).as("fp"))
+    // shuffle of raw text. The cost is recomputing the signature for
+    // exact-duplicate rows instead of once per distinct text; duplicates
+    // are a small fraction of a real corpus, raw text is not.
+    val sigs0 = base.select(col("id"), md5(col("text")).as("fp"),
+      graft.functions.MinhashBandsExpression.minhashBands(
+        col("text"), bands, rowsPerBand, shingleN).as("bands"))
+    val sigs =
+      if (materialize)
+        sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else sigs0
 
     // Degenerate-corpus hardening, part 1: collapse exact-identical texts
-    // FIRST (fingerprint groupBy — shuffles (fp, id) pairs only). A
-    // corpus of N identical documents would otherwise put all N rows
-    // into the SAME bucket of every band — a single quadratic join
-    // cell. LSH sees one representative per distinct text;
-    // identical-text pairs (jaccard exactly 1.0) are emitted directly
-    // from the groups, and cross-group verified pairs expand back to
-    // group members at the end. Checkpointed: three consumers (intra,
-    // rep ids, member expansion) would otherwise re-run the aggregate.
-    val groups0 = fps
+    // FIRST (fingerprint groupBy — Catalyst prunes `bands` off this
+    // branch, so it shuffles (fp, id) pairs only). A corpus of N identical
+    // documents would otherwise put all N rows into the SAME bucket of
+    // every band — a single quadratic join cell. LSH sees one
+    // representative per distinct text; identical-text pairs (jaccard
+    // exactly 1.0) are emitted directly from the groups, and cross-group
+    // verified pairs expand back to group members at the end.
+    val groups = sigs
       .groupBy(col("fp"))
       .agg(sort_array(collect_list(col("id"))).as("members"),
         min(col("id")).as("rep_id"))
-    val groups =
-      if (materialize) groups0.localCheckpoint(false) else groups0
-
-    // ONE action materializes the groups checkpoint AND measures the
-    // corpus duplication for the kernel-placement gate below (the
-    // zero-cache variant keeps the lazy all-rows shape — no cheap count
-    // exists without the checkpoint).
-    val (nGroups, nRows) =
-      if (materialize) {
-        val r = groups.agg(count(lit(1)), sum(size(col("members")))).collect()(0)
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      } else (-1L, -1L)
 
     // all (a, b) with a < b inside an identical-text group; posexplode the
     // left element first so the pair fan-out parallelizes across tasks
@@ -339,29 +297,8 @@ object Dedup {
     // bands a true near-dup pair is overwhelmingly likely to meet in
     // another, smaller bucket.
     val repIds = groups.select(col("rep_id").as("id"))
-    // Band-kernel placement, gated on the MEASURED duplication:
-    //  - no duplication (nRows == nGroups): every row is its own rep —
-    //    kernel on the full scan, no rep semi-join at all;
-    //  - high duplication (≥ RepOnlyKernelDupFactor): kernel on reps
-    //    ONLY — the rep-id set semi-filters the text scan BEFORE the
-    //    kernel (conditional broadcast, the candIds discipline), so
-    //    duplicate rows never pay shingling+hashing. Costs one extra
-    //    text read vs fusing fp+bands into one scan; the kernel is
-    //    ~20× a parquet text read per row, so the split pays for
-    //    itself from ~5% duplication up;
-    //  - low/unknown duplication (and the zero-cache variant): kernel
-    //    on the full scan, reps filtered after — the r18 shape.
-    def bandsOf(d: DataFrame): DataFrame = d.select(col("id"),
-      graft.functions.MinhashBandsExpression.minhashBands(
-        col("text"), bands, rowsPerBand, shingleN).as("bands"))
-    val repBands =
-      if (nRows >= 0 && nRows == nGroups)
-        bandsOf(base)
-      else if (nRows >= 0 && nRows >= RepOnlyKernelDupFactor * nGroups)
-        bandsOf(base.join(maybeBroadcast(repIds, nGroups), Seq("id"), "left_semi"))
-      else
-        bandsOf(base).join(repIds, Seq("id"), "left_semi") // (id, 32 ints), not text
-    val bucketsRaw = repBands
+    val bucketsRaw = sigs.select(col("id"), col("bands"))
+      .join(repIds, Seq("id"), "left_semi") // moves (id, 32 ints), not text
       .select(col("id"),
         posexplode(col("bands")).as(Seq("band", "bhash")))
     // Oversized buckets via groupBy, not count().over(Window): the window
@@ -412,7 +349,7 @@ object Dedup {
     // unconditionally (documented caller tradeoff).
     val nCandPairs = if (materialize) candidates.count() else -1L
 
-    // The LAST text scan: shingle sets exist only for
+    // The SECOND (and last) text scan: shingle sets exist only for
     // candidate documents — the candidate-id set semi-filters the scan
     // (AQE broadcasts it; candidate ids are a sliver of the corpus), so
     // non-candidate rows never pay the shingle kernel and shingles
@@ -473,7 +410,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
     val release: () => Unit =
       if (materialize) { () =>
-        org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(groups)
+        sigs.unpersist(blocking = false)
         org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(candidates)
       } else () => ()
     (pairs, release)

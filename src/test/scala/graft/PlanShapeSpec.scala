@@ -324,7 +324,7 @@ class PlanShapeSpec extends SparkSpec {
     "d10_bloom_decontaminate" -> 3, // bloom filter build over benchmark
     "d11_pagerank" -> 26,          // 5 join+sum rounds + rank bucketing
     "d14_hits" -> 18,              // hub/authority rounds
-    "d16_bfs_levels" -> 16,        // frontier rounds
+    "d16_bfs_levels" -> 14,        // frontier rounds, one count per hop
     // r12: the persisted kernel pass hides d13's file scan behind an
     // InMemoryRelation; r16: the self-releasing eager pair-list
     // materialization (frees the fingerprint persist — CacheManager

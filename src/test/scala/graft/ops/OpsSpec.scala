@@ -814,19 +814,18 @@ class OpsSpec extends SparkSpec {
       s"total order must not warn, got: '$quiet'")
   }
 
-  test("minhash rep-only band-kernel gate: identical pairs on every duplication level (r19)") {
-    // The r19 kernel-placement gate has three branches — no duplication
-    // (kernel on the full scan, no rep semi-join), low duplication
-    // (< RepOnlyKernelDupFactor: kernel on all rows, reps filtered
-    // after) and high duplication (kernel on reps only, semi-filtered
-    // scan). Each branch must emit the exact pair set of the ungated
-    // lazy shape.
+  test("minhash default vs materialize=false: same pairs at three duplication levels") {
+    // The default (persisted signatures, checkpointed candidates) must
+    // emit exactly the lazy zero-cache shape's pair set whether the
+    // corpus has no exact duplicates, a few, or mostly duplicates — the
+    // identical-text collapse and the member expansion both run on
+    // every level.
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     def corpus(copiesOf: Int => Int): org.apache.spark.sql.DataFrame = {
       val texts = (1 to 120).flatMap { i =>
         val words = Seq.fill(25)(s"w${i}_${rnd.nextInt(40)}").mkString(" ")
-        // a planted near-copy (one extra token) + exact copies per gate
+        // a planted near-copy (one extra token) + exact copies
         (words + " tail") +: Seq.fill(copiesOf(i))(words)
       }
       texts.zipWithIndex.map { case (t, ix) => (ix.toLong, t) }
@@ -837,15 +836,15 @@ class OpsSpec extends SparkSpec {
           materialize = mat)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val shapes = Seq(
-      "none (ratio 1.0, full-scan fast path)" -> corpus(_ => 1),
-      "low (ratio ~1.05, all-rows kernel path)" -> corpus(i => if (i % 10 == 0) 2 else 1),
-      "high (ratio ~2.5, rep-only kernel path)" -> corpus(_ => 4))
+      "none (ratio 1.0)" -> corpus(_ => 1),
+      "low (ratio ~1.05)" -> corpus(i => if (i % 10 == 0) 2 else 1),
+      "high (ratio ~2.5)" -> corpus(_ => 4))
     for ((label, df) <- shapes) {
       val eager = pairSet(df, mat = true)
       val lazyP = pairSet(df, mat = false)
       assert(eager.nonEmpty, s"$label: pin corpus must produce pairs")
-      assert(eager == lazyP, s"$label: gated default shape must emit " +
-        "the identical pair set to the ungated lazy shape")
+      assert(eager == lazyP, s"$label: default shape must emit " +
+        "the identical pair set to the lazy shape")
     }
   }
 
@@ -879,20 +878,96 @@ class OpsSpec extends SparkSpec {
       Thread.sleep(300) // drain the async listener bus
       assert(got == expected, "materialized pipeline must emit identical pairs")
       assert(expected.nonEmpty)
-      // DEFAULT shape (r19 split-kernel): 3 text scans — fingerprint
-      // pass, band-kernel pass (this corpus has no exact duplicates, so
-      // the gate takes the all-rows path), candidate-only shingle
-      // verify = 900 records — plus the groups checkpoint's block reads
-      // (≤ 3 consumers × distinct texts; RDD cache reads count toward
-      // recordsRead, the r18 persist's InMemoryRelation reads did not)
-      // and the candidate checkpoint's reads (bounded by the pair
-      // count). The r11 zero-residue plan read the source 6x.
-      assert(recs.get() <= 3 * 300 + 3 * 300 + 4 * expected.size,
+      // DEFAULT shape: 2 text scans (signature build + candidate-only
+      // shingle verify = 600 records) + the candidate checkpoint's
+      // cache-block reads (bounded by the pair count; RDD cache reads
+      // count toward recordsRead, InMemoryRelation reads do not) —
+      // the zero-residue plan reads the source 6x
+      assert(recs.get() <= 2 * 300 + 4 * expected.size,
         s"default mode read ${recs.get()} records " +
-          s"(expected ~${3 * 300} source + groups/candidate cache)")
+          s"(expected ~${2 * 300} + candidate cache)")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.catalog.clearCache()
+    }
+  }
+
+  test("minhash never shuffles text when distinct texts exceed the broadcast cap") {
+    // The rep filter must never be a text-side join: with more distinct
+    // texts than MaxBroadcastCandidatePairs and auto-broadcast off, a
+    // semi-join of the text scan against the rep ids would shuffle
+    // document bodies. Only the candidate-id semi-join may touch text,
+    // and it broadcasts while the candidate count is within the cap.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    // 2.5x exact duplication: per base text 4 exact copies + 1 near-copy
+    val docs = (1 to 200).flatMap { i =>
+      val words = Seq.fill(25)(s"w${i}_${rnd.nextInt(40)}").mkString(" ")
+      Seq.fill(4)(words) :+ (words + " tail")
+    }.zipWithIndex.map { case (t, ix) => (ix.toLong, t) }
+      .toDF("doc_id", "text").localCheckpoint(true)
+    // candidate pairs as the operator counts them: distinct rep pairs
+    // sharing any (band, bhash) bucket
+    val reps = docs.groupBy("text").agg(min(col("doc_id")).as("id"))
+    val nDistinct = reps.count()
+    val b = reps.select(col("id"), posexplode(
+      graft.functions.MinhashBandsExpression.minhashBands(col("text"), 32, 3, 3))
+      .as(Seq("band", "bhash")))
+    val nCand = b.as("x").join(b.as("y"), col("x.band") === col("y.band") &&
+        col("x.bhash") === col("y.bhash") && col("x.id") < col("y.id"))
+      .select(col("x.id"), col("y.id")).distinct().count()
+    assert(nCand > 0 && nCand < nDistinct,
+      s"pin corpus needs candidates ($nCand) below distinct texts ($nDistinct)")
+
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = {
+      val here = p match { case e: ShuffleExchangeExec => Seq(e); case _ => Nil }
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case other => other.children ++ other.subqueries
+      }
+      here ++ inner.flatMap(shuffles)
+    }
+    val textShuffles = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
+        executions.incrementAndGet()
+        shuffles(qe.executedPlan).filter(_.output.exists(_.name == "text"))
+          .foreach(e => textShuffles.add(s"$fn:\n${e.treeString}"))
+      }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val savedConf = thresholds.map(k => k -> spark.conf.getOption(k))
+    val savedLimit = Dedup.MaxBroadcastCandidatePairs
+    try {
+      thresholds.foreach(spark.conf.set(_, "-1"))
+      Dedup.MaxBroadcastCandidatePairs = (nCand + nDistinct) / 2
+      spark.listenerManager.register(listener)
+      val n = Dedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.5)
+        .count()
+      val bus = spark.sparkContext.getClass
+        .getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      assert(n > 0, "pin corpus must produce pairs")
+      assert(executions.get() > 0, "listener saw no executions")
+      assert(textShuffles.isEmpty,
+        s"document text crossed a shuffle:\n${textShuffles.toArray.mkString("\n")}")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      Dedup.MaxBroadcastCandidatePairs = savedLimit
+      savedConf.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 
@@ -936,16 +1011,14 @@ class OpsSpec extends SparkSpec {
       val (d02Reads, d02n) =
         measured(Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", 0.5))
       assert(d02n > 0, "pin data must produce near-dup pairs")
-      // the r19 default: 3 source scans (fingerprint pass, band-kernel
-      // pass — all-rows here, no exact dups — and the candidate-only
-      // shingle verify) + the groups checkpoint's block reads (≤3
-      // consumers × distinct texts) + the candidate checkpoint's reads
+      // the r12 default: 2 source scans (signature build + candidate-only
+      // shingle verify) + the candidate checkpoint's cache-block reads
       // (bounded by the pair count — RDD cache reads count toward
-      // recordsRead; the r18 signature persist's InMemoryRelation reads
-      // did not). The r11 default read 6x.
-      assert(d02Reads <= 3 * nRows + 3 * nRows + 4 * d02n,
+      // recordsRead; the persisted signature frame's InMemoryRelation
+      // reads do not). The r11 default read 6x.
+      assert(d02Reads <= 2 * nRows + 4 * d02n,
         s"d02 default read ${d02Reads} records for $nRows rows " +
-          "(budget 3x source + groups/candidate cache)")
+          "(budget 2x source + candidate cache)")
       val (d04Reads, d04n) =
         measured(Dedup.simhashNearDupPairs(onDisk, "doc_id", "text", 7))
       assert(d04n > 0)
