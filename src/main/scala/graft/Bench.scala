@@ -17,11 +17,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cores
     val spark = GraftSession.builder(
         appName = "graft-bench",
-        master = s"local[$cpus]",
-        shufflePartitions = math.max(cpus.toInt, 8))
+        shufflePartitions = math.max(cpus, 8))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -122,7 +121,7 @@ object Bench {
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
       .toAbsolutePath.toString
-    val json = s"""{"artifact":"$outPath","metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":$passTotals,"pass_ratio_max":$maxRatio,"pass_ratio_max_query":"$maxRatioQuery","pass_ratios":${jsonMap(ratios)},"passes":$passes,"sf":"$sfDir"}"""
+    val json = s"""{"artifact":"$outPath","metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":$passTotals,"pass_ratio_max":$maxRatio,"pass_ratio_max_query":"$maxRatioQuery","pass_ratios":${jsonMap(ratios)},"passes":$passes,"sf":"$sfDir","host":{"cores":$cpus,"max_heap_bytes":${Runtime.getRuntime.maxMemory}}}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>

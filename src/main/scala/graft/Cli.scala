@@ -407,7 +407,7 @@ object Cli {
         val priorSigs = spark.read.parquet(sigDir)
         val delta = examples.CurationPipeline.curateIncrement(
           docs, benchmark, standing, cfg = cfg,
-          standingSigs = Some(priorSigs))
+          standingSigs = priorSigs)
         sinks.CorpusWriter.writeCurated(delta, outDir,
           partitionCols = Seq("split", "lang"))
         // all further steps read the WRITTEN delta — never the live frame

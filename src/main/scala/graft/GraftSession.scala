@@ -4,15 +4,21 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory with scale-appropriate defaults.
   *
-  * Tuned for the local[32] test harness but every setting is chosen for the
-  * 1000-executor / 100 TB design point too: AQE handles runtime re-planning
+  * Local mode defaults to one worker thread per host core ([[cores]]),
+  * and every setting is chosen for the 1000-executor / 100 TB design
+  * point too: AQE handles runtime re-planning
   * (coalescing post-shuffle partitions, skew-join splitting), broadcast
   * threshold keeps dimension tables map-side, and shuffle partitions are
   * explicit rather than the 200 default.
   */
 object GraftSession {
+  /** Local-mode worker threads: `SPARK_GRAFT_CPUS`, else every core the
+    * JVM sees. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def builder(appName: String = "graft",
-              master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+              master: String = s"local[$cores]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)

@@ -236,12 +236,15 @@ object CurationPipeline {
     * the shape production corpus refreshes actually run. The new batch
     * goes through the full [[curate]] gate chain (so its text is
     * canonicalized/scrubbed exactly like the standing rows were), then
-    * [[Dedup.dedupAgainst]] drops every row that is an exact or near
-    * duplicate of ANY standing row (bipartite band join — the standing
-    * corpus never self-joins). Returns ONLY the surviving new rows; the
-    * caller appends them to the standing corpus (see the `curate`
-    * CLI's `curate.against` mode), after which re-running the same
-    * input yields zero rows.
+    * [[Dedup.dedupAgainstSignatures]] drops every row that is an exact
+    * or near duplicate of ANY standing row (bipartite band join — the
+    * standing corpus never self-joins). Fingerprints and bands come from
+    * `standingSigs`, the maintained [[Dedup.signatures]] table of
+    * `standing` (~1-2% of the corpus bytes); standing TEXT is scanned
+    * once, for candidate verification only. Returns ONLY the surviving
+    * new rows; the caller appends them to the standing corpus (see the
+    * `curate` CLI's `curate.against` mode), after which re-running the
+    * same input yields zero rows.
     *
     * Epoch upsampling is rejected here: a standing corpus must hold one
     * row per document (repeat copies would pair with each other on the
@@ -252,22 +255,14 @@ object CurationPipeline {
                       idCol: String = "doc_id", textCol: String = "text",
                       langCol: String = "lang",
                       cfg: Config = Config(),
-                      standingSigs: Option[DataFrame] = None): DataFrame = {
+                      standingSigs: DataFrame): DataFrame = {
     require(cfg.epochWeights.isEmpty,
       "curateIncrement: epoch upsampling does not compose with a standing " +
         "corpus (one row per document); apply repeats at export time")
     val curated = curate(newDocs, benchmark, idCol, textCol, langCol, cfg)
-    standingSigs match {
-      // production shape: fingerprints/bands from the maintained
-      // signature table (~1-2% of the corpus bytes); standing TEXT is
-      // scanned once, for candidate verification only
-      case Some(sigs) => Dedup.dedupAgainstSignatures(curated, sigs,
-        standing.select(col(idCol), col(textCol)), idCol, textCol,
-        cfg.nearDupThreshold)
-      case None => Dedup.dedupAgainst(curated,
-        standing.select(col(idCol), col(textCol)),
-        idCol, textCol, cfg.nearDupThreshold)
-    }
+    Dedup.dedupAgainstSignatures(curated, standingSigs,
+      standing.select(col(idCol), col(textCol)), idCol, textCol,
+      cfg.nearDupThreshold)
   }
 
   /** Curate and write, partitioned by (split, lang) with bounded writer

@@ -36,11 +36,9 @@ object Dedup {
   private[graft] var MaxBroadcastCandidatePairs: Long = 4L * 1000 * 1000
 
   /** Broadcast-hint `ids` when the measured candidate count is within
-    * [[MaxBroadcastCandidatePairs]]; a negative count means "unknown"
-    * (zero-cache variants have no cheap count) and keeps the hint —
-    * the documented materialize=false tradeoff. */
+    * [[MaxBroadcastCandidatePairs]]. */
   private def maybeBroadcast(ids: DataFrame, nPairs: Long): DataFrame =
-    if (nPairs < 0 || nPairs <= MaxBroadcastCandidatePairs) broadcast(ids)
+    if (nPairs <= MaxBroadcastCandidatePairs) broadcast(ids)
     else ids
 
   // ---- exact --------------------------------------------------------------
@@ -170,9 +168,8 @@ object Dedup {
     * and jaccard >= threshold. bands × rowsPerBand hashes; defaults give
     * P(detect | j=0.8) ≈ 1 - (1-0.8³)^32 ≈ 1 - 2e-5 per pair.
     *
-    * The DEFAULT (`materialize = true`) is the shape the 100 TB plan
-    * wants: the fixed-width (id, fp, bands) signature projection —
-    * ~1-2% of the text bytes, the same frame [[signatures]] persists to
+    * The fixed-width (id, fp, bands) signature projection — ~1-2% of
+    * the text bytes, the same frame [[signatures]] persists to
     * parquet — is auto-persisted (MEMORY_AND_DISK: the storage pool's
     * LRU plus disk spill make a size estimate unnecessary, and blocks
     * release on unpersist / LRU / app exit), so the corpus TEXT is read
@@ -182,35 +179,28 @@ object Dedup {
     * Shingle sets are never persisted and never computed corpus-wide:
     * at scale they are ~3× the text bytes, so the r11 knob's
     * persist-everything shape would park a corpus-sized frame in the
-    * cache. `materialize = false` is the zero-cache-residue variant:
-    * identical results (spec-pinned), but each consumer re-scans the
-    * column-pruned source and the candidate set recomputes per
-    * consumer. [[nearDupDedup]]/[[nearDupDedupBy]] release the cached
+    * cache. [[nearDupDedup]]/[[nearDupDedupBy]] release the cached
     * frames deterministically once the component fixpoint has
     * materialized. */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.8,
                           bands: Int = 32, rowsPerBand: Int = 3,
                           shingleN: Int = 3,
-                          maxBucketSize: Int = 10000,
-                          materialize: Boolean = true): DataFrame = {
+                          maxBucketSize: Int = 10000): DataFrame = {
     val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, bands, rowsPerBand, shingleN, maxBucketSize, materialize)
-    // SELF-RELEASING under the default: eagerly materialize the pair
-    // list (id pairs + jaccard — metadata-sized at any corpus) and free
-    // the signature persist + candidate checkpoint here and now. A
-    // Dataset-level persist is held by the session's CacheManager with a
-    // STRONG reference — unlike checkpoint RDD blocks it is NEVER
-    // GC-reclaimable, so before this release every default-shape call
-    // stranded a signature-frame copy for the life of the session (the
-    // r15 in-session decay: repeated bench executions squeezed the
-    // unified pool ~2× by pass 2).
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true)
-      release()
-      out
-    }
+      threshold, bands, rowsPerBand, shingleN, maxBucketSize)
+    // SELF-RELEASING: eagerly materialize the pair list (id pairs +
+    // jaccard — metadata-sized at any corpus) and free the signature
+    // persist + candidate checkpoint here and now. A Dataset-level
+    // persist is held by the session's CacheManager with a STRONG
+    // reference — unlike checkpoint RDD blocks it is NEVER
+    // GC-reclaimable, so without this release every call would strand
+    // a signature-frame copy for the life of the session (the r15
+    // in-session decay: repeated bench executions squeezed the unified
+    // pool ~2× by pass 2).
+    val out = pairs.localCheckpoint(true)
+    release()
+    out
   }
 
   /** [[minhashNearDupPairs]] plus a `release` thunk that frees the
@@ -234,7 +224,7 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int, rowsPerBand: Int,
       shingleN: Int, maxBucketSize: Int,
-      materialize: Boolean, edgesOnly: Boolean = false): (DataFrame, () => Unit) = {
+      edgesOnly: Boolean = false): (DataFrame, () => Unit) = {
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
 
     // Shuffle discipline, part 0: document bodies NEVER ride a shuffle.
@@ -246,13 +236,10 @@ object Dedup {
     // shuffle of raw text. The cost is recomputing the signature for
     // exact-duplicate rows instead of once per distinct text; duplicates
     // are a small fraction of a real corpus, raw text is not.
-    val sigs0 = base.select(col("id"), md5(col("text")).as("fp"),
+    val sigs = base.select(col("id"), md5(col("text")).as("fp"),
       graft.functions.MinhashBandsExpression.minhashBands(
         col("text"), bands, rowsPerBand, shingleN).as("bands"))
-    val sigs =
-      if (materialize)
-        sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigs0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Degenerate-corpus hardening, part 1: collapse exact-identical texts
     // FIRST (fingerprint groupBy — Catalyst prunes `bands` off this
@@ -321,20 +308,19 @@ object Dedup {
       .join(broadcast(oversized), Seq("band", "bhash"), "left_anti")
       .repartition(col("band"), col("bhash"))
 
-    val candidates0 = buckets.alias("a").join(buckets.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bhash") === col("b.bhash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
     // Lazily checkpointed (the dedupAgainstSignatures shape): the
     // candidate set feeds BOTH the verify scan's semi-filter and the
     // pair probe — without materialization the band self-join would
     // execute per consumer. Candidates are bounded (band-collision rep
     // pairs after the oversized-bucket cap); released by the Impl
     // caller's thunk, or on GC.
-    val candidates =
-      if (materialize) candidates0.localCheckpoint(false) else candidates0
+    val candidates = buckets.alias("a").join(buckets.alias("b"),
+        col("a.band") === col("b.band") &&
+        col("a.bhash") === col("b.bhash") &&
+        col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .localCheckpoint(false)
 
     // Eagerly materialize the lazy checkpoint via count(): the
     // materialization job was already part of this operator's job
@@ -344,10 +330,8 @@ object Dedup {
     // an unconditional broadcast(candIds) on a dup-heavy corpus can
     // exceed driver/broadcast limits. Above the threshold the semi-join
     // falls back to a shuffled semi (ids are 8-byte keys, the shuffle
-    // is cheap relative to the verify itself). Without `materialize`
-    // there is no cheap count — the zero-cache variant keeps the hint
-    // unconditionally (documented caller tradeoff).
-    val nCandPairs = if (materialize) candidates.count() else -1L
+    // is cheap relative to the verify itself).
+    val nCandPairs = candidates.count()
 
     // The SECOND (and last) text scan: shingle sets exist only for
     // candidate documents — the candidate-id set semi-filters the scan
@@ -408,11 +392,10 @@ object Dedup {
 
     val pairs = expanded.unionByName(intra)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    val release: () => Unit =
-      if (materialize) { () =>
-        sigs.unpersist(blocking = false)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(candidates)
-      } else () => ()
+    val release: () => Unit = { () =>
+      sigs.unpersist(blocking = false)
+      org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(candidates)
+    }
     (pairs, release)
   }
 
@@ -532,7 +515,7 @@ object Dedup {
     // in the duplication factor (the 100×-replicated-corpus probe OOM'd
     // the fixpoint on the quadratic full pair set)
     val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, 32, 3, 3, 10000, materialize = true, edgesOnly = true)
+      threshold, 32, 3, 3, 10000, edgesOnly = true)
     // connectedComponents EAGERLY materializes the pairs (its edge
     // checkpoint) and returns a checkpoint-backed label frame, so the
     // pair pipeline's cached signature frame and candidate checkpoint
@@ -560,7 +543,7 @@ object Dedup {
                      score: Column, threshold: Double = 0.8): DataFrame = {
     // edgesOnly — see nearDupDedup: identical components, linear edges
     val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, 32, 3, 3, 10000, materialize = true, edgesOnly = true)
+      threshold, 32, 3, 3, 10000, edgesOnly = true)
     // see nearDupDedup: the fixpoint materializes the pairs; free the
     // pair pipeline's cache blocks before the election runs
     val comps = connectedComponents(pairs, "id_a", "id_b")
@@ -751,11 +734,10 @@ object Dedup {
   def winnowNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                          threshold: Double = 1.0, k: Int = 5,
                          window: Int = 4,
-                         maxDocsPerFp: Int = 1000,
-                         materialize: Boolean = true): DataFrame = {
-    // `materialize` (DEFAULT on): back the one kernel pass with a LAZY
-    // local checkpoint so every consumer reads a single materialized
-    // copy — the source is then scanned exactly once. A checkpoint, NOT
+                         maxDocsPerFp: Int = 1000): DataFrame = {
+    // Back the one kernel pass with a LAZY local checkpoint so every
+    // consumer reads a single materialized copy — the source is then
+    // scanned exactly once. A checkpoint, NOT
     // a CacheManager persist, and NOT an eager result materialization,
     // for two residue/pushdown reasons learned the hard way:
     //  - checkpoint RDD blocks are GC-RECLAIMABLE once the returned
@@ -772,19 +754,16 @@ object Dedup {
     //    the unfiltered candidate set is ~all pairs, and only pushdown
     //    keeps the graded query off that cliff.
     // The checkpointed frame is fingerprint-sized (~|text|/window longs
-    // per doc — never the text itself). `materialize = false` skips the
-    // barrier entirely (identical results, ~3 source scans).
-    val fps0 = df.select(col(idCol).as("id"),
+    // per doc — never the text itself).
+    val fps = df.select(col(idCol).as("id"),
       graft.functions.WinnowExpression.winnowCol(col(textCol), k, window)
         .as("fp"))
-    val fps =
-      if (materialize) fps0.localCheckpoint(false)
-      else fps0
+      .localCheckpoint(false)
     // build the barrier NOW (the d19/d12 discipline): the final action
     // runs the hot-count and both self-join sides CONCURRENTLY, and
     // stages racing a cold checkpoint each re-run the kernel scan; one
     // count() makes every consumer a block read (scan pin: OpsSpec)
-    if (materialize) fps.count(): Unit
+    fps.count(): Unit
     val exploded = fps.select(col("id"), explode(col("fp")).as("f"))
     val hot = exploded.groupBy("f").agg(count(lit(1)).as("c"))
       .filter(col("c") > maxDocsPerFp).select(col("f"))
@@ -853,44 +832,29 @@ object Dedup {
   def dedupAgainst(batch: DataFrame, prior: DataFrame,
                    idCol: String, textCol: String,
                    threshold: Double = 0.8, bands: Int = 32,
-                   rowsPerBand: Int = 3, shingleN: Int = 3,
-                   materialize: Boolean = true): DataFrame = {
-    // All BATCH-side scan features (exact fingerprint, band signature,
-    // shingle set) come off ONE shared narrow projection, the d02
-    // discipline: Catalyst prunes the unused kernels per consumer, so
-    // the default plan equals deriving each feature separately, while
-    // identical subtrees collapse at runtime via exchange reuse. The r10
-    // shape instead re-derived features from `fresh` (the post-anti-join
-    // frame), so every consumer re-executed BOTH the batch scan and the
-    // prior fingerprint scan — 11 measured source reads; this shape
-    // reads the batch 4x and the prior 3x (d02 parity).
+                   rowsPerBand: Int = 3, shingleN: Int = 3): DataFrame = {
+    // All BATCH-side scan features come off ONE shared narrow projection
+    // (see [[narrowOf]]). The r10 shape instead re-derived features from
+    // `fresh` (the post-anti-join frame), so every consumer re-executed
+    // BOTH the batch scan and the prior fingerprint scan — 11 measured
+    // source reads; this shape reads the batch 4x and the prior 3x (d02
+    // parity).
     //
-    // `materialize` (DEFAULT on) persists the BATCH side's narrow
-    // features only: they are increment-sized, so the cache residue
-    // per call is bounded by one batch (a per-increment caller should
-    // still clearCache between runs; `materialize = false` is the
-    // zero-residue variant, identical results). The PRIOR side is
+    // Only the BATCH side's narrow features are persisted: they are
+    // increment-sized, so the cache residue per call is bounded by one
+    // batch and released before returning. The PRIOR side is
     // deliberately NOT persisted — it is corpus-sized, and the
     // documented production pattern is to materialize its signature
     // table once per corpus build externally, not to cache raw corpus
     // text per increment.
-    def narrowOf(df: DataFrame): DataFrame = df.select(
-      col(idCol).as("id"),
-      md5(col(textCol)).as("fp"),
-      graft.functions.MinhashBandsExpression.minhashBands(
-        col(textCol), bands, rowsPerBand, shingleN).as("bands"),
-      shingleCol(col(textCol), shingleN).as("sh"))
-    val newNarrow0 = narrowOf(batch)
-    val newNarrow =
-      if (materialize)
-        newNarrow0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else newNarrow0
+    val newNarrow = narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // build the cache NOW (the d19 discipline): the survivor-id job
     // below starts its anti-join and band-join stages CONCURRENTLY, and
     // two stages racing a cold cache each re-run the batch scan + kernel
     // build; one count() makes every consumer a block read
-    if (materialize) newNarrow.count(): Unit
-    val oldNarrow = narrowOf(prior)
+    newNarrow.count(): Unit
+    val oldNarrow = narrowOf(prior, idCol, textCol, bands, rowsPerBand, shingleN)
     // stage 1: exact fingerprints — (fp, id) pairs only cross the wire
     val priorFp = oldNarrow.select(col("fp")).distinct()
     val freshIds = newNarrow.select(col("id"), col("fp"))
@@ -918,25 +882,35 @@ object Dedup {
     val drops = cand.join(newSh, "id").join(oldSh, "pid")
       .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
       .select(col("id")).distinct()
-    val keepIds0 = freshIds.join(drops, Seq("id"), "left_anti")
-    // self-releasing default: the survivor ID SET (id-sized, never text)
-    // is eagerly materialized, at which point the batch-side narrow
-    // cache is dead — free it before returning. The CacheManager holds
+    // self-releasing: the survivor ID SET (id-sized, never text) is
+    // eagerly materialized, at which point the batch-side narrow cache
+    // is dead — free it before returning. The CacheManager holds
     // Dataset persists with strong references (never GC-reclaimed), so
-    // before this release every increment call — including each
-    // streaming micro-batch — stranded a batch-narrow copy for the life
-    // of the session. The returned semi-join stays LAZY: the batch
+    // without this release every increment call — including each
+    // streaming micro-batch — would strand a batch-narrow copy for the
+    // life of the session. The returned semi-join stays LAZY: the batch
     // source re-streams once when the caller acts, and text never
     // enters storage.
-    val keepIds =
-      if (!materialize) keepIds0
-      else {
-        val ids = keepIds0.localCheckpoint(true)
-        newNarrow.unpersist(blocking = false)
-        ids
-      }
+    val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
+      .localCheckpoint(true)
+    newNarrow.unpersist(blocking = false)
     batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
   }
+
+  /** The narrow per-row features of the incremental dedup paths, off ONE
+    * shared projection (the d02 discipline): id, exact md5 fingerprint,
+    * minhash band signature and shingle set. Catalyst prunes the unused
+    * kernels per consumer, so the plan equals deriving each feature
+    * separately, while identical subtrees collapse at runtime via
+    * exchange reuse. */
+  private def narrowOf(df: DataFrame, idCol: String, textCol: String,
+                       bands: Int, rowsPerBand: Int,
+                       shingleN: Int): DataFrame = df.select(
+    col(idCol).as("id"),
+    md5(col(textCol)).as("fp"),
+    graft.functions.MinhashBandsExpression.minhashBands(
+      col(textCol), bands, rowsPerBand, shingleN).as("bands"),
+    shingleCol(col(textCol), shingleN).as("sh"))
 
   /** The (id, fp, bands) signature table of a corpus — built ONCE per
     * corpus build and reused by every [[dedupAgainstSignatures]]
@@ -969,40 +943,34 @@ object Dedup {
     * that replaces two full corpus text reads per increment with two
     * reads of a table ~1-2% the size. Same results as [[dedupAgainst]]
     * given `priorSigs == signatures(prior, ...)` with matching
-    * parameters (spec-pinned). */
-  /** `bloomPrefilter` (DEFAULT on): two Blooms over the BATCH side's
-    * fingerprints and band hashes (increment-sized — the d10 trick
-    * pointed at the prior) dismiss prior signature rows that cannot
-    * match ANY batch row before they reach the distinct/join exchanges.
-    * With a 10x-100x prior:batch ratio that removes most of the
-    * bipartite join's input volume (shuffle-records spec-pinned); Bloom
-    * false positives only add candidates, which exact verification then
-    * rejects — results identical (spec-pinned).
+    * parameters (spec-pinned).
     *
-    * Both Blooms plus the batch row count are built in ONE eager Spark
-    * job (a `treeAggregate` over the persisted narrow frame, which also
-    * populates its cache — so the prefilter costs one job, not three,
-    * and an empty batch yields empty Blooms instead of crashing).
-    * Blooms are pre-sized from Catalyst's row-count estimate; sizing
-    * only tunes the false-positive rate (undersizing degrades fpp
-    * gracefully, and false positives merely add candidates), so a wrong
-    * estimate can never change results.
+    * Bloom prefilter: two Blooms over the BATCH side's fingerprints and
+    * band hashes (increment-sized — the d10 trick pointed at the prior)
+    * dismiss prior signature rows that cannot match ANY batch row
+    * before they reach the distinct/join exchanges. With a 10x-100x
+    * prior:batch ratio that removes most of the bipartite join's input
+    * volume (shuffle-records spec-pinned); Bloom false positives only
+    * add candidates, which exact verification then rejects — results
+    * identical (spec-pinned).
     *
-    * NOTE this makes the call EAGER under the defaults: Spark jobs run
-    * at call time (bloom sizing/build + the broadcast-gating candidate
-    * count) rather than at the first action on the returned frame.
-    * Callers that build plans speculatively (never executing them)
-    * should pass `bloomPrefilter = false, materialize = false` — that
-    * shape runs zero jobs at construction and keeps the unconditional
-    * broadcast hint. */
+    * Both Blooms are built in ONE fused `treeAggregate` over the
+    * persisted narrow frame, after the `count()` that populates its
+    * cache and sizes them exactly (an empty batch short-circuits before
+    * any Bloom exists). Sizing only tunes the false-positive rate
+    * (undersizing degrades fpp gracefully, and false positives merely
+    * add candidates), so it can never change results.
+    *
+    * NOTE the call is EAGER: Spark jobs run at call time (batch count,
+    * Bloom build, the broadcast-gating candidate count and the
+    * survivor-id checkpoint) rather than at the first action on the
+    * returned frame. */
   def dedupAgainstSignatures(batch: DataFrame, priorSigs: DataFrame,
                              priorText: DataFrame,
                              idCol: String, textCol: String,
                              threshold: Double = 0.8, bands: Int = 32,
-                             rowsPerBand: Int = 3, shingleN: Int = 3,
-                             materialize: Boolean = true,
-                             bloomPrefilter: Boolean = true,
-                             bloomFpp: Double = 0.01): DataFrame = {
+                             rowsPerBand: Int = 3,
+                             shingleN: Int = 3): DataFrame = {
     require(priorSigs.columns.toSet == Set("id", "fp", "bands"),
       s"priorSigs must be a signatures() table (id, fp, bands), " +
         s"got ${priorSigs.columns.toSeq}")
@@ -1021,105 +989,72 @@ object Dedup {
               s"increment passes $name=$expected — band hashes would " +
               "never match and near-duplicates would be silently missed")
     }
-    def narrowOf(df: DataFrame): DataFrame = df.select(
-      col(idCol).as("id"),
-      md5(col(textCol)).as("fp"),
-      graft.functions.MinhashBandsExpression.minhashBands(
-        col(textCol), bands, rowsPerBand, shingleN).as("bands"),
-      shingleCol(col(textCol), shingleN).as("sh"))
-    val newNarrow0 = narrowOf(batch)
-    val newNarrow =
-      if (materialize)
-        newNarrow0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else newNarrow0
+    val newNarrow = narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newBands = newNarrow.select(col("id"),
       posexplode(col("bands")).as(Seq("band", "bhash")))
     // (band, bhash) packed into one long key for the Bloom
     def bandKey(band: Column, bhash: Column): Column =
       shiftleft(band.cast("long"), 32)
         .bitwiseOR(bhash.cast("long").bitwiseAND(lit(0xffffffffL)))
-    val (priorFpAll, oldBandsAll) = (
-      priorSigs.select(col("fp")),
-      priorSigs.select(col("id").as("pid"),
-        posexplode(col("bands")).as(Seq("band", "bhash"))))
-    val (priorFpSrc, oldBands) =
-      if (!bloomPrefilter) (priorFpAll, oldBandsAll)
-      else {
-        // TWO cache-resident jobs build the prefilter (down from r12's
-        // three source-subtree re-executions): `count()` is the job that
-        // materializes the persisted narrow frame's cache AND yields the
-        // exact Bloom sizing (a Catalyst row-count estimate is off by
-        // orders of magnitude for narrow rows — LocalRelation strings
-        // are costed at a flat 20 bytes — and an undersized Bloom
-        // silently degrades to a pass-everything filter); then ONE fused
-        // treeAggregate over the cache fills BOTH Blooms in a single
-        // pass. An empty batch short-circuits before any Bloom exists.
-        val nBatch = newNarrow.count()
-        if (nBatch == 0L) {
-          newNarrow.unpersist()
-          return batch.limit(0)
-        }
-        val fpExpected = nBatch
-        val bandExpected = nBatch * bands
-        // null-text rows hash to a sentinel key (one extra Bloom entry,
-        // harmless) rather than NPE-ing the aggregate
-        val keyed = newNarrow.select(
-          coalesce(xxhash64(col("fp")), lit(0L)).as("fph"),
-          coalesce(transform(col("bands"),
-            (b: Column, i: Column) => bandKey(i, b)),
-            typedLit(Seq.empty[Long])).as("bkeys"))
-        import org.apache.spark.util.sketch.BloomFilter
-        val zero = (BloomFilter.create(fpExpected, bloomFpp),
-          BloomFilter.create(bandExpected, bloomFpp))
-        val (fpBloomF, bandBloomF) = keyed.rdd.treeAggregate(zero)(
-          seqOp = { (acc, row) =>
-            acc._1.putLong(row.getLong(0))
-            val ks = row.getSeq[Long](1)
-            var i = 0
-            while (i < ks.length) { acc._2.putLong(ks(i)); i += 1 }
-            acc
-          },
-          combOp = { (a, b) =>
-            (a._1.mergeInPlace(b._1).asInstanceOf[BloomFilter],
-              a._2.mergeInPlace(b._2).asInstanceOf[BloomFilter])
-          })
-        val fpBloom =
-          graft.functions.BloomMightContainExpression.serialize(fpBloomF)
-        val bandBloom =
-          graft.functions.BloomMightContainExpression.serialize(bandBloomF)
-        (priorFpAll.filter(
-          graft.functions.BloomMightContainExpression.mightContain(
-            xxhash64(col("fp")), fpBloom)),
-          oldBandsAll.filter(
-            graft.functions.BloomMightContainExpression.mightContain(
-              bandKey(col("band"), col("bhash")), bandBloom)))
-      }
-    val priorFp = priorFpSrc.distinct()
+    // `count()` is the job that materializes the persisted narrow
+    // frame's cache AND yields the exact Bloom sizing (a Catalyst
+    // row-count estimate is off by orders of magnitude for narrow rows —
+    // LocalRelation strings are costed at a flat 20 bytes — and an
+    // undersized Bloom silently degrades to a pass-everything filter)
+    val nBatch = newNarrow.count()
+    if (nBatch == 0L) {
+      newNarrow.unpersist()
+      return batch.limit(0)
+    }
+    // null-text rows hash to a sentinel key (one extra Bloom entry,
+    // harmless) rather than NPE-ing the aggregate
+    val keyed = newNarrow.select(
+      coalesce(xxhash64(col("fp")), lit(0L)).as("fph"),
+      coalesce(transform(col("bands"),
+        (b: Column, i: Column) => bandKey(i, b)),
+        typedLit(Seq.empty[Long])).as("bkeys"))
+    import org.apache.spark.util.sketch.BloomFilter
+    val zero = (BloomFilter.create(nBatch, BloomFpp),
+      BloomFilter.create(nBatch * bands, BloomFpp))
+    val (fpBloomF, bandBloomF) = keyed.rdd.treeAggregate(zero)(
+      seqOp = { (acc, row) =>
+        acc._1.putLong(row.getLong(0))
+        val ks = row.getSeq[Long](1)
+        var i = 0
+        while (i < ks.length) { acc._2.putLong(ks(i)); i += 1 }
+        acc
+      },
+      combOp = { (a, b) =>
+        (a._1.mergeInPlace(b._1).asInstanceOf[BloomFilter],
+          a._2.mergeInPlace(b._2).asInstanceOf[BloomFilter])
+      })
+    val fpBloom =
+      graft.functions.BloomMightContainExpression.serialize(fpBloomF)
+    val bandBloom =
+      graft.functions.BloomMightContainExpression.serialize(bandBloomF)
+    val priorFp = priorSigs.select(col("fp"))
+      .filter(graft.functions.BloomMightContainExpression.mightContain(
+        xxhash64(col("fp")), fpBloom))
+      .distinct()
+    val oldBands = priorSigs.select(col("id").as("pid"),
+        posexplode(col("bands")).as(Seq("band", "bhash")))
+      .filter(graft.functions.BloomMightContainExpression.mightContain(
+        bandKey(col("band"), col("bhash")), bandBloom))
     val freshIds = newNarrow.select(col("id"), col("fp"))
       .join(priorFp, Seq("fp"), "left_anti")
       .select(col("id"))
     // lazily checkpointed: the candidate set feeds BOTH the standing-text
     // semi-join and the verify join — without materialization the band
     // join (and its two scans) would execute twice. Candidates are
-    // bounded (band-collision pairs of an increment); blocks free on GC
-    // checkpointed only under materialize (the d02 contract): even a
-    // LAZY localCheckpoint's RDD construction executes the upstream
-    // stages under AQE, which would break the zero-jobs-at-construction
-    // promise of the fully-lazy shape. Without it, cand recomputes per
-    // consumer — the documented zero-residue tradeoff.
-    val cand0 = newBands.join(oldBands, Seq("band", "bhash"))
+    // bounded (band-collision pairs of an increment); released below
+    val cand = newBands.join(oldBands, Seq("band", "bhash"))
       .select(col("id"), col("pid")).distinct()
-    val cand = if (materialize) cand0.localCheckpoint(false) else cand0
+      .localCheckpoint(false)
     // materialize the checkpoint NOW via count() (the job the first
     // consumer would have run anyway) — the exact pair count gates the
-    // broadcast hint below, the d02 conditional-broadcast discipline.
-    // Skipped on the fully-lazy shape (bloomPrefilter=false AND
-    // materialize=false): that variant exists for callers that build
-    // plans speculatively, and a count here would execute the whole
-    // upstream DAG at construction time — they keep the unconditional
-    // hint instead (the documented zero-cache tradeoff).
-    val nCandPairs =
-      if (bloomPrefilter || materialize) cand.count() else -1L
+    // broadcast hint below, the d02 conditional-broadcast discipline
+    val nCandPairs = cand.count()
     val newSh = newNarrow.select(col("id"), col("sh").as("sha"))
     // the ONE standing-text scan: candidate pids semi-filter the scan
     // BEFORE the shingle kernel runs, so only candidate docs pay it —
@@ -1133,23 +1068,23 @@ object Dedup {
     val drops = cand.join(newSh, "id").join(oldSh, "pid")
       .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
       .select(col("id")).distinct()
-    val keepIds0 = freshIds.join(drops, Seq("id"), "left_anti")
-    // self-releasing default (the dedupAgainst discipline): eagerly
-    // materialize the id-sized survivor set, then free the batch-narrow
-    // persist AND the candidate checkpoint — a streaming session runs
-    // this once per micro-batch, and before the release each batch
-    // stranded a CacheManager-held copy for the life of the stream. The
-    // returned semi-join stays lazy; text never enters storage.
-    val keepIds =
-      if (!materialize) keepIds0
-      else {
-        val ids = keepIds0.localCheckpoint(true)
-        newNarrow.unpersist(blocking = false)
-        org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(cand)
-        ids
-      }
+    // self-releasing (the dedupAgainst discipline): eagerly materialize
+    // the id-sized survivor set, then free the batch-narrow persist AND
+    // the candidate checkpoint — a streaming session runs this once per
+    // micro-batch, and without the release each batch would strand a
+    // CacheManager-held copy for the life of the stream. The returned
+    // semi-join stays lazy; text never enters storage.
+    val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
+      .localCheckpoint(true)
+    newNarrow.unpersist(blocking = false)
+    org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(cand)
     batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
   }
+
+  /** False-positive rate of [[dedupAgainstSignatures]]' batch-side
+    * Blooms: a false positive only lets one prior signature row through
+    * to the exchanges, never changes a result. */
+  private val BloomFpp = 0.01
 
   /** Serialized Bloom filter over `benchmark`'s distinct n-gram hashes —
     * the batch-side trainer for [[graft.streaming.StreamingCuration

@@ -108,7 +108,7 @@ object IncrementalCuration {
 
     val delta = CurationPipeline.curateIncrement(
       batch, benchmark, standing, cfg = cfg,
-      standingSigs = Some(priorSigs))
+      standingSigs = priorSigs)
     // materialize the delta ONCE (the curation + dedup DAG must not
     // re-execute per consumer), then read the written copy back
     delta.write.mode("overwrite").parquet(deltaTmp)

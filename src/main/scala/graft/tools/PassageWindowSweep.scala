@@ -12,7 +12,7 @@ object PassageWindowSweep {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.builder(
-      appName = "passage-sweep", master = "local[32]").getOrCreate()
+      appName = "passage-sweep").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.documentsBalanced(spark, sf)
     for (w <- args.map(_.toInt).toSeq match {

@@ -40,7 +40,8 @@ object ProbeQuery {
     val names = args.headOption.getOrElse("x04_sitemap_index")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val passes = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = GraftSession.builder("probe-query", "local[32]", 32).getOrCreate()
+    val spark = GraftSession.builder("probe-query",
+      shufflePartitions = math.max(GraftSession.cores, 8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sc = spark.sparkContext

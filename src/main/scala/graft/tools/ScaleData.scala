@@ -36,8 +36,7 @@ object ScaleData {
     val factor = factorS.toInt
     require(factor >= 1)
     val spark = graft.GraftSession.builder(
-      appName = "graft-scale-data", master = "local[32]",
-      shufflePartitions = 32).getOrCreate()
+      appName = "graft-scale-data", shufflePartitions = 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     for ((table, keys) <- KeyCols.toSeq.sortBy(_._1)) {

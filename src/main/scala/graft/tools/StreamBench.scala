@@ -27,8 +27,7 @@ object StreamBench {
     val sfDir = args.headOption.getOrElse("target/sf1")
     val bands = args.lift(1).map(_.toInt).getOrElse(4)
     val store = args.lift(2).getOrElse("hdfs") // hdfs | rocksdb
-    val spark = graft.GraftSession.builder("graft-stream-bench",
-      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]").getOrCreate()
+    val spark = graft.GraftSession.builder("graft-stream-bench").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (store == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -495,7 +495,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def comps(edgesOnly: Boolean): Map[Long, Long] = {
       val (pairs, release) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
-        "text", 0.5, 32, 3, 3, 10000, materialize = true, edgesOnly = edgesOnly)
+        "text", 0.5, 32, 3, 3, 10000, edgesOnly = edgesOnly)
       val c = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select("id", "component").as[(Long, Long)].collect().toMap
       release(); c
@@ -507,9 +507,9 @@ class OpsSpec extends SparkSpec {
     // and the edge COUNT is linear, not quadratic: full ≥ 2·C(k,2), star
     // ≤ 2(k-1) + rep-level cross pairs
     val (fullPairs, r1) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
-      "text", 0.5, 32, 3, 3, 10000, materialize = true, edgesOnly = false)
+      "text", 0.5, 32, 3, 3, 10000, edgesOnly = false)
     val (starPairs, r2) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
-      "text", 0.5, 32, 3, 3, 10000, materialize = true, edgesOnly = true)
+      "text", 0.5, 32, 3, 3, 10000, edgesOnly = true)
     val nFull = fullPairs.count(); val nStar = starPairs.count()
     r1(); r2()
     assert(nFull >= 2L * k * (k - 1) / 2, s"full pair set should be quadratic: $nFull")
@@ -814,41 +814,55 @@ class OpsSpec extends SparkSpec {
       s"total order must not warn, got: '$quiet'")
   }
 
-  test("minhash default vs materialize=false: same pairs at three duplication levels") {
-    // The default (persisted signatures, checkpointed candidates) must
-    // emit exactly the lazy zero-cache shape's pair set whether the
-    // corpus has no exact duplicates, a few, or mostly duplicates — the
-    // identical-text collapse and the member expansion both run on
-    // every level.
+  /** Driver-side reference for [[Dedup.minhashNearDupPairs]]: every
+    * (a < b) pair whose exact shingle Jaccard reaches `threshold`, with
+    * the operator's 4-digit HALF_UP rounding. Exact for corpora whose
+    * near-dups sit far above the LSH detection curve and whose other
+    * pairs share no shingle. */
+  private def referencePairs(docs: Seq[(Long, String)],
+                             threshold: Double): Set[(Long, Long, Double)] = {
+    val sh = docs.map { case (id, t) => id -> Dedup.shingles(t) }
+    (for {
+      (a, sa) <- sh; (b, sb) <- sh if a < b
+      j = Dedup.jaccard(sa, sb) if j >= threshold
+    } yield (a, b, BigDecimal(j).setScale(4,
+      BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+  }
+
+  test("minhash pairs match the exact-Jaccard reference at three duplication levels") {
+    // The persisted signatures and checkpointed candidates must emit
+    // exactly the reference pair set whether the corpus has no exact
+    // duplicates, a few, or mostly duplicates — the identical-text
+    // collapse and the member expansion both run on every level. Texts
+    // of different `i` share no token, so every reference pair is a
+    // planted copy (Jaccard 1.0) or near-copy (one extra token, far
+    // above the 32x3 banding's detection curve).
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    def corpus(copiesOf: Int => Int): org.apache.spark.sql.DataFrame = {
+    def corpus(copiesOf: Int => Int): Seq[(Long, String)] = {
       val texts = (1 to 120).flatMap { i =>
         val words = Seq.fill(25)(s"w${i}_${rnd.nextInt(40)}").mkString(" ")
         // a planted near-copy (one extra token) + exact copies
         (words + " tail") +: Seq.fill(copiesOf(i))(words)
       }
       texts.zipWithIndex.map { case (t, ix) => (ix.toLong, t) }
-        .toDF("doc_id", "text").localCheckpoint(true)
     }
-    def pairSet(df: org.apache.spark.sql.DataFrame, mat: Boolean) =
-      Dedup.minhashNearDupPairs(df, "doc_id", "text", threshold = 0.5,
-          materialize = mat)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val shapes = Seq(
       "none (ratio 1.0)" -> corpus(_ => 1),
       "low (ratio ~1.05)" -> corpus(i => if (i % 10 == 0) 2 else 1),
       "high (ratio ~2.5)" -> corpus(_ => 4))
-    for ((label, df) <- shapes) {
-      val eager = pairSet(df, mat = true)
-      val lazyP = pairSet(df, mat = false)
-      assert(eager.nonEmpty, s"$label: pin corpus must produce pairs")
-      assert(eager == lazyP, s"$label: default shape must emit " +
-        "the identical pair set to the lazy shape")
+    for ((label, docs) <- shapes) {
+      val df = docs.toDF("doc_id", "text").localCheckpoint(true)
+      val got = Dedup.minhashNearDupPairs(df, "doc_id", "text", threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val expected = referencePairs(docs, 0.5)
+      assert(expected.nonEmpty, s"$label: pin corpus must produce pairs")
+      assert(got == expected, s"$label: pair set must equal the reference " +
+        s"(missing ${(expected -- got).take(5)}, extra ${(got -- expected).take(5)})")
     }
   }
 
-  test("minhash default vs zero-residue: identical pairs, bounded source reads") {
+  test("minhash pairs match the exact reference with bounded source reads") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val dir = java.nio.file.Files.createTempDirectory("mhmat").toString
     val rnd = new scala.util.Random(5)
@@ -857,34 +871,30 @@ class OpsSpec extends SparkSpec {
       val words = Seq.fill(30)(s"w${i}_${rnd.nextInt(50)}").mkString(" ")
       // every doc has a planted near-copy at id+1000 (one extra token)
       Seq((i, words), (i + 1000L, words + " tail"))
-    }.toDF("doc_id", "text")
-    docs.write.mode("overwrite").parquet(dir)
+    }
+    docs.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val onDisk = spark.read.parquet(dir)
-    def pairs(mat: Boolean) =
-      Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", threshold = 0.5,
-          materialize = mat)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val expected = referencePairs(docs, 0.5)
     val recs = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskMetrics != null)
           recs.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
-    val expected = pairs(mat = false)
     spark.sparkContext.addSparkListener(listener)
     try {
       recs.set(0)
-      val got = pairs(mat = true)
+      val got = Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", threshold = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       Thread.sleep(300) // drain the async listener bus
-      assert(got == expected, "materialized pipeline must emit identical pairs")
       assert(expected.nonEmpty)
-      // DEFAULT shape: 2 text scans (signature build + candidate-only
-      // shingle verify = 600 records) + the candidate checkpoint's
-      // cache-block reads (bounded by the pair count; RDD cache reads
-      // count toward recordsRead, InMemoryRelation reads do not) —
-      // the zero-residue plan reads the source 6x
+      assert(got == expected, "pipeline must emit the reference pairs")
+      // 2 text scans (signature build + candidate-only shingle verify =
+      // 600 records) + the candidate checkpoint's cache-block reads
+      // (bounded by the pair count; RDD cache reads count toward
+      // recordsRead, InMemoryRelation reads do not)
       assert(recs.get() <= 2 * 300 + 4 * expected.size,
-        s"default mode read ${recs.get()} records " +
+        s"minhash read ${recs.get()} records " +
           s"(expected ~${2 * 300} + candidate cache)")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
@@ -1109,7 +1119,7 @@ class OpsSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("d19 bloom prefilter: identical keep set; prior-side shuffle volume collapses") {
+  test("d19 bloom prefilter: prior-side shuffle volume stays batch-sized") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import spark.implicits._
     // 10x prior:batch ratio — the d19 sf1 class the prefilter targets
@@ -1133,28 +1143,30 @@ class OpsSpec extends SparkSpec {
           shuffleRecs.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
     }
     spark.sparkContext.addSparkListener(listener)
-    def measured(f: => org.apache.spark.sql.DataFrame): (Set[Long], Long) = {
+    try {
       shuffleRecs.set(0)
-      val keep = f.select("doc_id").as[Long].collect().toSet
+      val keep = Dedup.dedupAgainstSignatures(
+          fullBatch, sigs, prior, "doc_id", "text", 0.9)
+        .select("doc_id").as[Long].collect().toSet
       val bus = spark.sparkContext.getClass
         .getMethod("listenerBus").invoke(spark.sparkContext)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (keep, shuffleRecs.get())
-    }
-    try {
-      val (keepOff, recsOff) = measured(Dedup.dedupAgainstSignatures(
-        fullBatch, sigs, prior, "doc_id", "text", 0.9,
-        bloomPrefilter = false))
-      val (keepOn, recsOn) = measured(Dedup.dedupAgainstSignatures(
-        fullBatch, sigs, prior, "doc_id", "text", 0.9))
-      assert(keepOn == keepOff, "bloom prefilter must not change the keep set")
-      assert(keepOn.nonEmpty && !keepOn.exists(_ > 9000L),
-        s"planted exact dups must drop, novel rows survive: $keepOn")
-      // the prior's (fp / band) rows are dismissed INSIDE the scan, so
-      // the exchanges see a batch-sized stream instead of a prior-sized
-      // one — at 10x ratio the shuffle volume must at least halve
-      assert(recsOn * 2 <= recsOff,
-        s"bloom prefilter shuffle records $recsOn vs $recsOff without")
+      val recs = shuffleRecs.get()
+      assert(keep == (8001L to 8100L).toSet,
+        s"planted exact dups must drop, novel rows survive: $keep")
+      // Unfiltered, every distinct prior fingerprint crosses the
+      // fingerprint-distinct exchange at least once (partial aggregation
+      // dedups within a map task, never across), so the whole call's
+      // shuffle stream is at least that many records. The prefilter
+      // dismisses prior rows INSIDE the scan: only the 100 planted
+      // matches plus ~1% false positives remain, and the stream must
+      // stay under half that unfiltered floor. (The band join broadcasts
+      // the batch side at this size, so prior band rows reach no
+      // exchange either way.)
+      val unfilteredFloor = sigs.select("fp").distinct().count()
+      assert(recs * 2 <= unfilteredFloor,
+        s"bloom prefilter let $recs shuffle records through; an " +
+          s"unfiltered plan writes at least $unfilteredFloor")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -1179,7 +1191,7 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("copy"))
   }
 
-  test("winnow and incremental dedup materialize knobs preserve results") {
+  test("winnow and incremental dedup find exactly the planted copies") {
     import spark.implicits._
     val rnd = new scala.util.Random(9)
     val docs = (1L to 80L).flatMap { i =>
@@ -1187,22 +1199,14 @@ class OpsSpec extends SparkSpec {
       Seq((i, words), (i + 500L, words))
     }.toDF("doc_id", "text")
     try {
-      // r12: materialize defaults ON — the zero-residue variant is the
-      // knob now; both must emit identical results
-      val w0 = Dedup.winnowNearDupPairs(docs, "doc_id", "text",
-          materialize = false)
+      // at overlap 1.0 the only pairs are the planted (i, i+500) copies:
+      // texts of different i share no token
+      val w = Dedup.winnowNearDupPairs(docs, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val w1 = Dedup.winnowNearDupPairs(docs, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(w0.nonEmpty && w0 == w1)
+      assert(w == (1L to 80L).map(i => (i, i + 500L)).toSet,
+        s"winnow must find exactly the planted copies, got ${w.size} pairs")
       val prior = docs.filter(col("doc_id") <= 500L)
       val batch = docs.filter(col("doc_id") > 500L)
-      val i0 = Dedup.dedupAgainst(batch, prior, "doc_id", "text",
-          materialize = false)
-        .select("doc_id").as[Long].collect().toSet
-      val i1 = Dedup.dedupAgainst(batch, prior, "doc_id", "text")
-        .select("doc_id").as[Long].collect().toSet
-      assert(i0 == i1)
       // the production signature-table path returns the identical keep
       // set: exact/band stages read signatures(prior), text only verifies.
       // Mixed-outcome batch: exact copies (drop), near copies (drop via
@@ -1219,30 +1223,8 @@ class OpsSpec extends SparkSpec {
           "doc_id", "text")
         .select("doc_id").as[Long].collect().toSet
       assert(t1 == t0, "signature path must match the text path")
-      assert(t0.nonEmpty && t0.size < 80,
-        s"mixed batch must both keep and drop rows: kept ${t0.size}")
-      // fully-lazy escape hatch: bloomPrefilter=false + materialize=
-      // false must run ZERO Spark jobs at construction (the documented
-      // speculative-plan shape) — and still produce the same keep set
-      val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-      val jl = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(jl)
-      val lazyFrame =
-        try {
-          val f = Dedup.dedupAgainstSignatures(mixed, sigs, prior,
-            "doc_id", "text", bloomPrefilter = false, materialize = false)
-          val bus = spark.sparkContext.getClass
-            .getMethod("listenerBus").invoke(spark.sparkContext)
-          bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-          f
-        } finally spark.sparkContext.removeSparkListener(jl)
-      assert(jobs.get() == 0L,
-        s"lazy shape ran ${jobs.get()} construction jobs (must be 0)")
-      assert(lazyFrame.select("doc_id").as[Long].collect().toSet == t0)
+      assert(t0 == (501L to 580L).filter(_ % 3 == 0).toSet,
+        s"only the reversed (novel) rows may survive: kept $t0")
       // broadcast-fallback pin: above MaxBroadcastCandidatePairs the
       // verify semi-joins drop their broadcast hint (the dup-heavy
       // driver-OOM hazard) — keep sets and pair sets must not change

@@ -13,7 +13,7 @@ import graft.ops.Dedup
 object IncrementScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${graft.GraftSession.cores}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2,7 +2,9 @@
 # Run a graft main off the compiled classes WITHOUT sbt (no sbt-lock
 # contention with a concurrent `sbt test`; see .claude/skills/verify —
 # never overlap two sbt processes on this repo). Mirrors build.sbt's
-# forked-JVM options (JDK-17 add-opens, 24g heap, 2g code cache, UTC).
+# forked-JVM options (JDK-17 add-opens, a pinned and pre-touched heap of
+# SPARK_DRIVER_MEM or else half of MemTotal within [2g, 24g], 2g code
+# cache, UTC).
 #   tools/run_main.sh graft.Bench
 #   SPARK_GRAFT_SF_DIR=target/sf10 tools/run_main.sh graft.Bench
 #   tools/run_main.sh graft.tools.ScaleData /root/testdata/sf0.1 target/sf10 100
@@ -15,7 +17,13 @@ for p in "${OPENS[@]}"; do FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED"); done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   FLAGS+=(--add-opens "java.base/$p=ALL-UNNAMED")
 done
+if [[ -z "${SPARK_DRIVER_MEM:-}" ]]; then
+  SPARK_DRIVER_MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+    END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo 2>/dev/null || true)
+  SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-2g}
+fi
 exec java "${FLAGS[@]}" \
-  "-Xmx${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=2g \
+  "-Xms$SPARK_DRIVER_MEM" "-Xmx$SPARK_DRIVER_MEM" -XX:+AlwaysPreTouch \
+  -XX:ReservedCodeCacheSize=2g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
