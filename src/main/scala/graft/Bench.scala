@@ -26,19 +26,19 @@ object Bench {
 
     // a broken query must FAIL the bench run loudly, not silently lower the
     // total by dropping out as -1
-    def runOnce(name: String): Double = {
-      val t0 = System.nanoTime()
+    def runOnce(name: String): QueryProfile =
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
+        QueryProfile.run(spark, name)(SparkEntry.queries(name)(spark, sfDir))(
+          _.write.mode("overwrite").format("noop").save())._2
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] query $name FAILED: $e")
           spark.stop()
           sys.exit(1)
       }
-      (System.nanoTime() - t0) / 1e9
-    }
+    // a query's time is construction plus write; the profile's listener
+    // drain and storage reads lie outside it
+    def seconds(p: QueryProfile): Double = p.constructS + p.execS
 
     // warmup pass: every query once, untimed. SPARK_GRAFT_ONLY (comma-sep
     // names) narrows the set for local profiling; the driver never sets it.
@@ -51,7 +51,7 @@ object Bench {
     // sf10 otherwise accumulates tens of GB of dead spill on disk
     names.foreach { n =>
       System.gc()
-      val t = runOnce(n)
+      val t = seconds(runOnce(n))
       System.err.println(f"[bench] warmup $n%-28s ${t}%9.3f s")
     }
     // N timed passes (SPARK_GRAFT_BENCH_PASSES, default 3), report each
@@ -65,19 +65,20 @@ object Bench {
     // per-query progress on STDERR (stdout stays the one-line JSON
     // contract): at sf10 a full-registry pass runs >20 min, and a silent
     // bench is indistinguishable from a hung one
-    def timedPass(pass: Int): Map[String, Double] =
+    def timedPass(pass: Int): Map[String, QueryProfile] =
       names.map { n =>
         System.gc()
-        val t = runOnce(n)
-        System.err.println(f"[bench] pass $pass $n%-28s ${t}%9.3f s")
-        n -> t
+        val p = runOnce(n)
+        System.err.println(f"[bench] pass $pass $n%-28s ${seconds(p)}%9.3f s")
+        n -> p
       }.toMap
     // default 3, not 2: with 3+ passes the aging ratio below gates on
     // median/min, which a lone host stall cannot inflate — the DRIVER's
     // own artifact (which runs this default) then adjudicates itself
     val nPasses = math.max(2, sys.env.getOrElse(
       "SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val allPasses = (1 to nPasses).map(p => timedPass(p))
+    val profiledPasses = (1 to nPasses).map(p => timedPass(p))
+    val allPasses = profiledPasses.map(_.view.mapValues(seconds).toMap)
     val results = names.map(n => n -> allPasses.map(_(n)).min)
     def jsonMap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -122,8 +123,12 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
       .toAbsolutePath.toString
     val json = s"""{"artifact":"$outPath","metric":"total","value":$total,"unit":"sec","queries":$qs,"pass_totals":$passTotals,"pass_ratio_max":$maxRatio,"pass_ratio_max_query":"$maxRatioQuery","pass_ratios":${jsonMap(ratios)},"passes":$passes,"sf":"$sfDir","host":{"cores":$cpus,"max_heap_bytes":${Runtime.getRuntime.maxMemory}}}"""
+    // the artifact alone also carries each query's profile per pass,
+    // parallel to `passes`; the stdout lines keep their schema
+    val profiles = profiledPasses.map(p => names.map(n => "\"" + n + "\":" + p(n).toJson)
+      .mkString("{", ",", "}")).mkString("[", ",", "]")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
+      (json.dropRight(1) + s""","profiles":$profiles}\n""").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: $e") }
     // stop the session BEFORE the contract lines: Spark's shutdown logging

@@ -49,12 +49,7 @@ object GraftSession {
       // clean both times). 10k entries holds every unit of the full
       // registry; a production curation session (dozens of distinct
       // jobs, not 474 query executions) sits far below it either way.
-      // SPARK_GRAFT_CODEGEN_CACHE overrides for diagnosis: ProbeQuery's
-      // JVM axis run with a deliberately tiny cache (e.g. 2) reproduces
-      // the thrash signature (janino compile count climbing per pass)
-      // on demand, so the next wandering stall has a one-run contrast.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       // Below the bypass threshold Spark's shuffle writer opens ONE FILE
       // PER REDUCE PARTITION per map task and then concatenates them
       // (BypassMergeSortShuffleWriter.writePartitionedData →

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Run-level counters — the Spark-native form of the reference's progress
@@ -55,15 +56,10 @@ object RunMetrics {
     captured.remove(name)
     val obs = observed(df, name)
     action(obs)
-    // QueryExecutionListener delivery is async (listener bus): wait bounded
-    // for the observation of THIS run to land before firing hooks
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    var m = metricsFor(name)
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(25)
-      m = metricsFor(name)
-    }
-    val metrics = m.getOrElse(Map.empty)
+    // QueryExecutionListener delivery is async (listener bus): wait for
+    // the observation of THIS run to land before firing hooks
+    ListenerBridge.drain(df.sparkSession.sparkContext)
+    val metrics = metricsFor(name).getOrElse(Map.empty)
     hooks.foreach(_(metrics))
     metrics
   }

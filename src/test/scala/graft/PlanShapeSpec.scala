@@ -297,7 +297,8 @@ class PlanShapeSpec extends SparkSpec {
   // The t37 lesson: a query can pass every shape check while executing its
   // most expensive subtree three times — recomputation is invisible to
   // window/cartesian/exchange audits. Two measured budgets close that gap
-  // (graft.tools.PlanAuditDump regenerates the numbers):
+  // (every run writes each query's measured numbers to
+  // target/plan-audit.txt, the place to regenerate them from):
   //  - construction JOBS: Spark jobs triggered while building the frame
   //    (model-training collects, iterative rounds) — each extra job
   //    usually re-executes the source scan. Default budget = one
@@ -513,7 +514,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     // ONE pass over every registered query's physical plan, three
     // 100 TB scale-killer checks:
     //  - WindowExec with no partitionSpec: the whole frame sorts on one task
@@ -542,41 +543,26 @@ class PlanShapeSpec extends SparkSpec {
     val crossOff = scala.collection.mutable.ListBuffer[String]()
     val singleOff = scala.collection.mutable.ListBuffer[String]()
     val budgetOff = scala.collection.mutable.ListBuffer[String]()
-    // job counting scoped by job group: construction collects run on this
-    // thread and inherit the group, so background activity can't pollute
-    val groupJobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        g.filter(_.startsWith("plan-audit:")).foreach(id =>
-          groupJobs.merge(id, 1, (a, b) => a + b))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val audit = scala.collection.mutable.ListBuffer[String]()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      spark.sparkContext.setJobGroup(s"plan-audit:$name", name)
-      val plan =
-        try prepared(fn(spark, sfSmoke))
+      // the profile scopes job counting by job group: construction
+      // collects run on this thread and inherit the group, so background
+      // activity can't pollute the count
+      val (plan, profile) =
+        try QueryProfile.run(spark, s"plan-audit:$name")(prepared(fn(spark, sfSmoke)))(identity)
         catch { case e: Throwable =>
           fail(s"$name failed to plan at sfSmoke: $e") }
-        finally spark.sparkContext.clearJobGroup()
-      // drain the async listener bus SYNCHRONOUSLY (reflective call —
-      // listenerBus is private[spark], which is bytecode-public): a
-      // poll-until-stable loop can declare victory during a >25 ms
-      // delivery gap on a loaded host and undercount jobs, letting a
-      // new recomputation slip under its budget
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      val cur = Option(groupJobs.get(s"plan-audit:$name"))
-        .map(_.intValue).getOrElse(0)
+      val cur = profile.constructJobs
       val srcScans = plan.collect {
         case s: FileSourceScanExec =>
           s.relation.location.rootPaths.headOption
             .map(_.getName).getOrElse("?")
       }
       val perSource = srcScans.groupBy(identity).view.mapValues(_.size)
+      val v2Scans = plan.collect { case b: BatchScanExec => b.scan.getClass.getSimpleName }
+      audit += f"$name%-28s jobs=$cur%-3d scans=[" + (srcScans ++ v2Scans)
+        .groupBy(identity).toSeq.sortBy(_._1)
+        .map { case (src, hits) => s"$src=${hits.size}" }.mkString(",") + "]"
       val allowedJobs = jobBudget.getOrElse(name, perSource.size)
       if (cur > allowedJobs)
         budgetOff += s"$name: $cur construction jobs (budget $allowedJobs) — " +
@@ -617,6 +603,8 @@ class PlanShapeSpec extends SparkSpec {
         case _ => ()
       }
     }
+    java.nio.file.Files.write(java.nio.file.Paths.get("target", "plan-audit.txt"),
+      audit.mkString("", "\n", "\n").getBytes("UTF-8"))
     assert(windowOff.isEmpty,
       s"single-partition WindowExec in registered plans:\n${windowOff.mkString("\n")}")
     assert(crossOff.isEmpty,

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{SparkSpec, Tables}
+import graft.{QueryProfile, SparkSpec, Tables}
+import org.apache.spark.sql.graftbridge.ListenerBridge
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -863,7 +864,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("minhash pairs match the exact reference with bounded source reads") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     val dir = java.nio.file.Files.createTempDirectory("mhmat").toString
     val rnd = new scala.util.Random(5)
     import spark.implicits._
@@ -875,31 +875,21 @@ class OpsSpec extends SparkSpec {
     docs.toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val onDisk = spark.read.parquet(dir)
     val expected = referencePairs(docs, 0.5)
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          recs.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
-      recs.set(0)
-      val got = Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", threshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      Thread.sleep(300) // drain the async listener bus
+      val (got, profile) = QueryProfile.run(spark, "minhash-reads")(
+          Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", threshold = 0.5))(
+        _.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+      val recs = profile.inputRecords
       assert(expected.nonEmpty)
       assert(got == expected, "pipeline must emit the reference pairs")
       // 2 text scans (signature build + candidate-only shingle verify =
       // 600 records) + the candidate checkpoint's cache-block reads
       // (bounded by the pair count; RDD cache reads count toward
       // recordsRead, InMemoryRelation reads do not)
-      assert(recs.get() <= 2 * 300 + 4 * expected.size,
-        s"minhash read ${recs.get()} records " +
+      assert(recs <= 2 * 300 + 4 * expected.size,
+        s"minhash read $recs records " +
           s"(expected ~${2 * 300} + candidate cache)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("minhash never shuffles text when distinct texts exceed the broadcast cap") {
@@ -964,9 +954,7 @@ class OpsSpec extends SparkSpec {
       spark.listenerManager.register(listener)
       val n = Dedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.5)
         .count()
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      ListenerBridge.drain(spark.sparkContext)
       assert(n > 0, "pin corpus must produce pairs")
       assert(executions.get() > 0, "listener saw no executions")
       assert(textShuffles.isEmpty,
@@ -991,7 +979,6 @@ class OpsSpec extends SparkSpec {
     // d13 at 1, d12 at 1x batch + 3x prior. A regression above these
     // budgets means a consumer stopped sharing its subtree — fix the
     // plan, don't bump the number.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("scanpin").toString
     val rnd = new scala.util.Random(11)
@@ -1002,125 +989,111 @@ class OpsSpec extends SparkSpec {
     docs.write.mode("overwrite").parquet(dir)
     val onDisk = spark.read.parquet(dir)
     val nRows = onDisk.count()
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          recs.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
     def measured(f: => org.apache.spark.sql.DataFrame): (Long, Long) = {
-      recs.set(0)
-      val n = f.count()
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (recs.get(), n)
+      val (n, profile) = QueryProfile.run(spark, "source-reads")(f)(_.count())
+      (profile.inputRecords, n)
     }
-    try {
-      val (d02Reads, d02n) =
-        measured(Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", 0.5))
-      assert(d02n > 0, "pin data must produce near-dup pairs")
-      // the r12 default: 2 source scans (signature build + candidate-only
-      // shingle verify) + the candidate checkpoint's cache-block reads
-      // (bounded by the pair count — RDD cache reads count toward
-      // recordsRead; the persisted signature frame's InMemoryRelation
-      // reads do not). The r11 default read 6x.
-      assert(d02Reads <= 2 * nRows + 4 * d02n,
-        s"d02 default read ${d02Reads} records for $nRows rows " +
-          "(budget 2x source + candidate cache)")
-      val (d04Reads, d04n) =
-        measured(Dedup.simhashNearDupPairs(onDisk, "doc_id", "text", 7))
-      assert(d04n > 0)
-      // r18: the identical-signature collapse materializes a distinct-sig
-      // group frame behind a GC-reclaimable lazy checkpoint (the d13
-      // shape). Text still leaves the source exactly once (the kernel
-      // scan that builds the groups); checkpoint BLOCK reads count
-      // toward recordsRead, one per consumer — the chunk self-join
-      // (both sides share one repartition exchange), the two member-list
-      // attachments, the within-group expansion.
-      assert(d04Reads <= 4 * nRows,
-        s"d04 default read ${d04Reads} records for $nRows rows (budget: " +
-          "1 kernel source scan + 3 group-checkpoint block reads)")
-      val (d13Reads, d13n) =
-        measured(Dedup.winnowNearDupPairs(onDisk, "doc_id", "text", 0.6))
-      assert(d13n > 0)
-      // r16: the fingerprint barrier moved from a CacheManager persist
-      // to a GC-reclaimable lazy checkpoint (pushdown + residue, see
-      // winnowNearDupPairs). InMemoryRelation reads were invisible to
-      // recordsRead; checkpoint BLOCK reads count — so the budget is
-      // 1 source scan (the construction-time count that builds the
-      // barrier) + one block read per consumer (hot-count, the reused
-      // self-join exchange, the pair re-attachment join). Text still
-      // leaves the source exactly once.
-      assert(d13Reads <= 4 * nRows,
-        s"d13 default read ${d13Reads} records for $nRows rows " +
-          "(budget: 1 kernel-pass source scan + 3 checkpoint-block reads)")
-      // d12 reads its two sides from separate stores (the production
-      // shape); the r12 default persists the increment-sized batch
-      // narrow, so budget = 1x the batch + 3x the prior (was 4+3)
-      val priorDir = java.nio.file.Files.createTempDirectory("scanpin-p").toString
-      val batchDir = java.nio.file.Files.createTempDirectory("scanpin-b").toString
-      onDisk.filter(col("doc_id") <= 5000L)
-        .write.mode("overwrite").parquet(priorDir)
-      onDisk.filter(col("doc_id") > 5000L)
-        .write.mode("overwrite").parquet(batchDir)
-      val prior = spark.read.parquet(priorDir)
-      val batch = spark.read.parquet(batchDir)
-      val half = nRows / 2
-      val (d12Reads, d12n) =
-        measured(Dedup.dedupAgainst(batch, prior, "doc_id", "text", 0.95))
-      assert(d12n > 0, "pin data must keep some batch rows")
-      // 2x batch = 1 narrow-feature build (persisted, eagerly counted)
-      // + the final full-row fetch of the kept batch rows; 3x prior
-      // (fp/bands/sh consumers — the corpus side is deliberately never
-      // cached); + d12n survivor-id CACHE-BLOCK reads (r16: the
-      // self-releasing default eagerly checkpoints the id-sized keep
-      // set, and RDD cache reads count toward recordsRead — the price
-      // of freeing the batch-narrow persist deterministically)
-      assert(d12Reads <= (2 + 3) * half + half / 4 + d12n,
-        s"d12 default read ${d12Reads} records for $half-row sides, " +
-          s"$d12n kept (budget 2x batch + 3x prior + kept ids + slack)")
-      // survivor election: its overhead over the min-id election must be
-      // ONE extra source scan (the score projection — the component
-      // repartition collapses both election consumers onto one exchange)
-      // plus bounded cache-block reads; the absolute numbers are
-      // dominated by the components fixpoint's cache traffic on both
-      // paths, so the DELTA is the meaningful pin
-      val (minIdReads, _) =
-        measured(Dedup.nearDupDedup(onDisk, "doc_id", "text", 0.5))
-      val (electReads, electN) = measured(Dedup.nearDupDedupBy(
-        onDisk, "doc_id", "text", size(split(col("text"), " ")), 0.5))
-      assert(electN > 0)
-      assert(electReads <= minIdReads + 4 * nRows,
-        s"election read ${electReads} vs min-id ${minIdReads} " +
-          "(budget: +1 score scan + cache reads)")
-      // signature-table path: prior TEXT read once (verify only); the
-      // other prior-side reads hit the ~1-2%-sized signature table
-      val sigDir = java.nio.file.Files.createTempDirectory("scanpin-s").toString
-      Dedup.signatures(prior, "doc_id", "text")
-        .write.mode("overwrite").parquet(sigDir)
-      val sigs = spark.read.parquet(sigDir)
-      val (sigReads, _) = measured(
-        Dedup.dedupAgainstSignatures(batch, sigs, prior, "doc_id", "text", 0.95))
-      // SOURCE scans are 2x batch text (persisted narrow build + final
-      // full-row fetch) + 1x prior text + 2x sig table; the 4*half
-      // allowance is CACHE-block traffic, which also counts toward
-      // recordsRead: the candidate checkpoint is read by its
-      // broadcast-gating count, the verify join, and the standing-text
-      // semi filter, and r16's self-releasing survivor-id checkpoint is
-      // read by the final fetch (candidates/keeps ≈ one per batch row
-      // here). Cache reads scale with CANDIDATES, never the corpus — a
-      // failure past this budget means a SOURCE subtree stopped sharing.
-      assert(sigReads <= (2 + 1 + 2) * half + 4 * half,
-        s"d12-signatures read ${sigReads} records for $half-row sides " +
-          "(budget 2x batch text + 1x prior text + 2x signature table " +
-          "+ candidate/keep-set cache reads)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (d02Reads, d02n) =
+      measured(Dedup.minhashNearDupPairs(onDisk, "doc_id", "text", 0.5))
+    assert(d02n > 0, "pin data must produce near-dup pairs")
+    // the r12 default: 2 source scans (signature build + candidate-only
+    // shingle verify) + the candidate checkpoint's cache-block reads
+    // (bounded by the pair count — RDD cache reads count toward
+    // recordsRead; the persisted signature frame's InMemoryRelation
+    // reads do not). The r11 default read 6x.
+    assert(d02Reads <= 2 * nRows + 4 * d02n,
+      s"d02 default read ${d02Reads} records for $nRows rows " +
+        "(budget 2x source + candidate cache)")
+    val (d04Reads, d04n) =
+      measured(Dedup.simhashNearDupPairs(onDisk, "doc_id", "text", 7))
+    assert(d04n > 0)
+    // r18: the identical-signature collapse materializes a distinct-sig
+    // group frame behind a GC-reclaimable lazy checkpoint (the d13
+    // shape). Text still leaves the source exactly once (the kernel
+    // scan that builds the groups); checkpoint BLOCK reads count
+    // toward recordsRead, one per consumer — the chunk self-join
+    // (both sides share one repartition exchange), the two member-list
+    // attachments, the within-group expansion.
+    assert(d04Reads <= 4 * nRows,
+      s"d04 default read ${d04Reads} records for $nRows rows (budget: " +
+        "1 kernel source scan + 3 group-checkpoint block reads)")
+    val (d13Reads, d13n) =
+      measured(Dedup.winnowNearDupPairs(onDisk, "doc_id", "text", 0.6))
+    assert(d13n > 0)
+    // r16: the fingerprint barrier moved from a CacheManager persist
+    // to a GC-reclaimable lazy checkpoint (pushdown + residue, see
+    // winnowNearDupPairs). InMemoryRelation reads were invisible to
+    // recordsRead; checkpoint BLOCK reads count — so the budget is
+    // 1 source scan (the construction-time count that builds the
+    // barrier) + one block read per consumer (hot-count, the reused
+    // self-join exchange, the pair re-attachment join). Text still
+    // leaves the source exactly once.
+    assert(d13Reads <= 4 * nRows,
+      s"d13 default read ${d13Reads} records for $nRows rows " +
+        "(budget: 1 kernel-pass source scan + 3 checkpoint-block reads)")
+    // d12 reads its two sides from separate stores (the production
+    // shape); the r12 default persists the increment-sized batch
+    // narrow, so budget = 1x the batch + 3x the prior (was 4+3)
+    val priorDir = java.nio.file.Files.createTempDirectory("scanpin-p").toString
+    val batchDir = java.nio.file.Files.createTempDirectory("scanpin-b").toString
+    onDisk.filter(col("doc_id") <= 5000L)
+      .write.mode("overwrite").parquet(priorDir)
+    onDisk.filter(col("doc_id") > 5000L)
+      .write.mode("overwrite").parquet(batchDir)
+    val prior = spark.read.parquet(priorDir)
+    val batch = spark.read.parquet(batchDir)
+    val half = nRows / 2
+    val (d12Reads, d12n) =
+      measured(Dedup.dedupAgainst(batch, prior, "doc_id", "text", 0.95))
+    assert(d12n > 0, "pin data must keep some batch rows")
+    // 2x batch = 1 narrow-feature build (persisted, eagerly counted)
+    // + the final full-row fetch of the kept batch rows; 3x prior
+    // (fp/bands/sh consumers — the corpus side is deliberately never
+    // cached); + d12n survivor-id CACHE-BLOCK reads (r16: the
+    // self-releasing default eagerly checkpoints the id-sized keep
+    // set, and RDD cache reads count toward recordsRead — the price
+    // of freeing the batch-narrow persist deterministically)
+    assert(d12Reads <= (2 + 3) * half + half / 4 + d12n,
+      s"d12 default read ${d12Reads} records for $half-row sides, " +
+        s"$d12n kept (budget 2x batch + 3x prior + kept ids + slack)")
+    // survivor election: its overhead over the min-id election must be
+    // ONE extra source scan (the score projection — the component
+    // repartition collapses both election consumers onto one exchange)
+    // plus bounded cache-block reads; the absolute numbers are
+    // dominated by the components fixpoint's cache traffic on both
+    // paths, so the DELTA is the meaningful pin
+    val (minIdReads, _) =
+      measured(Dedup.nearDupDedup(onDisk, "doc_id", "text", 0.5))
+    val (electReads, electN) = measured(Dedup.nearDupDedupBy(
+      onDisk, "doc_id", "text", size(split(col("text"), " ")), 0.5))
+    assert(electN > 0)
+    assert(electReads <= minIdReads + 4 * nRows,
+      s"election read ${electReads} vs min-id ${minIdReads} " +
+        "(budget: +1 score scan + cache reads)")
+    // signature-table path: prior TEXT read once (verify only); the
+    // other prior-side reads hit the ~1-2%-sized signature table
+    val sigDir = java.nio.file.Files.createTempDirectory("scanpin-s").toString
+    Dedup.signatures(prior, "doc_id", "text")
+      .write.mode("overwrite").parquet(sigDir)
+    val sigs = spark.read.parquet(sigDir)
+    val (sigReads, _) = measured(
+      Dedup.dedupAgainstSignatures(batch, sigs, prior, "doc_id", "text", 0.95))
+    // SOURCE scans are 2x batch text (persisted narrow build + final
+    // full-row fetch) + 1x prior text + 2x sig table; the 4*half
+    // allowance is CACHE-block traffic, which also counts toward
+    // recordsRead: the candidate checkpoint is read by its
+    // broadcast-gating count, the verify join, and the standing-text
+    // semi filter, and r16's self-releasing survivor-id checkpoint is
+    // read by the final fetch (candidates/keeps ≈ one per batch row
+    // here). Cache reads scale with CANDIDATES, never the corpus — a
+    // failure past this budget means a SOURCE subtree stopped sharing.
+    assert(sigReads <= (2 + 1 + 2) * half + 4 * half,
+      s"d12-signatures read ${sigReads} records for $half-row sides " +
+        "(budget 2x batch text + 1x prior text + 2x signature table " +
+        "+ candidate/keep-set cache reads)")
   }
 
   test("d19 bloom prefilter: prior-side shuffle volume stays batch-sized") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     import spark.implicits._
     // 10x prior:batch ratio — the d19 sf1 class the prefilter targets
     val rnd = new scala.util.Random(23)
@@ -1136,38 +1109,25 @@ class OpsSpec extends SparkSpec {
     val fullBatch = batch.filter(col("doc_id") <= 8100L).unionByName(dups)
     val sigs = Dedup.signatures(prior, "doc_id", "text")
 
-    val shuffleRecs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null)
-          shuffleRecs.addAndGet(te.taskMetrics.shuffleWriteMetrics.recordsWritten)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      shuffleRecs.set(0)
-      val keep = Dedup.dedupAgainstSignatures(
-          fullBatch, sigs, prior, "doc_id", "text", 0.9)
-        .select("doc_id").as[Long].collect().toSet
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      val recs = shuffleRecs.get()
-      assert(keep == (8001L to 8100L).toSet,
-        s"planted exact dups must drop, novel rows survive: $keep")
-      // Unfiltered, every distinct prior fingerprint crosses the
-      // fingerprint-distinct exchange at least once (partial aggregation
-      // dedups within a map task, never across), so the whole call's
-      // shuffle stream is at least that many records. The prefilter
-      // dismisses prior rows INSIDE the scan: only the 100 planted
-      // matches plus ~1% false positives remain, and the stream must
-      // stay under half that unfiltered floor. (The band join broadcasts
-      // the batch side at this size, so prior band rows reach no
-      // exchange either way.)
-      val unfilteredFloor = sigs.select("fp").distinct().count()
-      assert(recs * 2 <= unfilteredFloor,
-        s"bloom prefilter let $recs shuffle records through; an " +
-          s"unfiltered plan writes at least $unfilteredFloor")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (keep, profile) = QueryProfile.run(spark, "d19-shuffle")(
+        Dedup.dedupAgainstSignatures(fullBatch, sigs, prior, "doc_id", "text", 0.9))(
+      _.select("doc_id").as[Long].collect().toSet)
+    val recs = profile.shuffleWriteRecords
+    assert(keep == (8001L to 8100L).toSet,
+      s"planted exact dups must drop, novel rows survive: $keep")
+    // Unfiltered, every distinct prior fingerprint crosses the
+    // fingerprint-distinct exchange at least once (partial aggregation
+    // dedups within a map task, never across), so the whole call's
+    // shuffle stream is at least that many records. The prefilter
+    // dismisses prior rows INSIDE the scan: only the 100 planted
+    // matches plus ~1% false positives remain, and the stream must
+    // stay under half that unfiltered floor. (The band join broadcasts
+    // the batch side at this size, so prior band rows reach no
+    // exchange either way.)
+    val unfilteredFloor = sigs.select("fp").distinct().count()
+    assert(recs * 2 <= unfilteredFloor,
+      s"bloom prefilter let $recs shuffle records through; an " +
+        s"unfiltered plan writes at least $unfilteredFloor")
   }
 
   test("epochUpsample edges: explicit zero weight drops; pure-fraction weight subsamples") {

@@ -11,12 +11,8 @@ class RunMetricsSpec extends SparkSpec {
     val m = RunMetrics.runWithHooks(df, "t_metrics")(
       _.write.mode("overwrite").format("noop").save())(
       metrics => hookSaw = metrics.get("records_out"))
-    // listener delivery is asynchronous in some paths; poll briefly
-    val got = (0 to 20).iterator.map { _ =>
-      Thread.sleep(50)
-      RunMetrics.metricsFor("t_metrics")
-    }.collectFirst { case Some(mm) => mm }.orElse(Some(m)).get
-    assert(got.get("records_out").contains(42L) || hookSaw.contains(42L))
+    assert(m("records_out") == 42)
+    assert(hookSaw == Some(42))
   }
 
   test("yaml writer emits one document per record") {
