@@ -243,10 +243,15 @@ object Cli {
       //     [-s curate.stream.checkpoint=dir]  (streaming incremental)
       //     docs.parquet...
       // curate.against = INCREMENTAL mode (today's crawl vs the standing
-      // corpus): the batch runs the full gate chain, then d12's bipartite
-      // dedup against the standing rows; outdir receives ONLY the
-      // surviving new rows, which are then appended into the standing
-      // corpus — so re-running the same input yields zero new rows.
+      // corpus), the same increment the streaming mode runs per
+      // micro-batch (IncrementalCuration.processBatch): the batch runs
+      // the full gate chain, then d19's signature-table dedup against the
+      // standing rows; outdir receives ONLY the surviving new rows, which
+      // are then appended into the standing corpus (and its
+      // signature table) — so re-running the same input yields
+      // zero new rows. A surviving row whose doc_id the standing corpus
+      // already holds (a recrawl with changed text) is quarantined to
+      // <standing>_rejected instead of appended.
       require(inputs.nonEmpty, "no input document tables given")
       import spark.implicits._
       // lazy: the streaming modes below return before any batch read,
@@ -376,78 +381,8 @@ object Cli {
           standing.columns.contains("text"),
           s"curate.against: $standingDir is not a curated corpus " +
             "(missing doc_id/text)")
-        // the standing SIGNATURE table (underscore dir: invisible to the
-        // corpus read above): fingerprints + band signatures maintained
-        // alongside the corpus so each increment reads the standing TEXT
-        // once (candidate verify) instead of three times. Built lazily on
-        // the first increment against a plain corpus; appended with every
-        // delta below.
-        val sigDir = s"$standingDir/_graft_signatures"
-        val hasSigs = {
-          val p = new org.apache.hadoop.fs.Path(sigDir)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          fs.exists(p) && fs.listStatus(p).exists(
-            _.getPath.getName.endsWith(".parquet"))
-        }
-        // self-heal: the corpus append and the signature append below are
-        // two writes — a crash between them leaves the table SHORT (rows
-        // in the corpus with no signature), which would let their
-        // duplicates back in and then wedge every later run on the
-        // collision guard. A row-count disagreement (parquet footer
-        // counts, cheap) triggers a full rebuild from the corpus.
-        val standingN = standing.count()
-        if (!hasSigs ||
-            spark.read.parquet(sigDir).count() != standingN) {
-          if (hasSigs) System.err.println(
-            s"[graft] curate: signature table out of sync with " +
-              s"$standingDir (interrupted append?) — rebuilding")
-          ops.Dedup.signatures(standing, "doc_id", "text")
-            .write.mode("overwrite").parquet(sigDir)
-        }
-        val priorSigs = spark.read.parquet(sigDir)
-        val delta = examples.CurationPipeline.curateIncrement(
-          docs, benchmark, standing, cfg = cfg,
-          standingSigs = priorSigs)
-        sinks.CorpusWriter.writeCurated(delta, outDir,
-          partitionCols = Seq("split", "lang"))
-        // all further steps read the WRITTEN delta — never the live frame
-        // (a second action would re-execute the curation + dedup DAG) —
-        // and an empty delta leaves no parquet to infer, hence the guard
-        val anyFiles = {
-          val conf = spark.sessionState.newHadoopConf()
-          val p = new org.apache.hadoop.fs.Path(outDir)
-          val fs = p.getFileSystem(conf)
-          var found = false
-          if (fs.exists(p)) {
-            val it = fs.listFiles(p, true)
-            while (!found && it.hasNext)
-              found = it.next().getPath.getName.endsWith(".parquet")
-          }
-          found
-        }
-        val written: Long =
-          if (!anyFiles) 0L
-          else {
-            val materialized = spark.read.parquet(outDir)
-            // an id collision (same doc_id, different content — so it
-            // survived the dedup) would corrupt the standing corpus:
-            // fail before appending
-            val collisions = materialized.select("doc_id")
-              .join(standing.select("doc_id"), Seq("doc_id"), "left_semi")
-              .count()
-            require(collisions == 0L,
-              s"curate.against: $collisions surviving doc_ids already " +
-                s"exist in $standingDir with different content — " +
-                "resolve ids before appending")
-            sinks.CorpusWriter.appendCurated(materialized, standingDir,
-              partitionCols = Seq("split", "lang"))
-            // keep the signature table in lockstep with the corpus: the
-            // next increment's exact/band stages never re-read this
-            // delta's text either
-            ops.Dedup.signatures(materialized, "doc_id", "text")
-              .write.mode("append").parquet(sigDir)
-            materialized.count()
-          }
+        val written = streaming.IncrementalCuration.processBatch(
+          spark, docs, standingDir, outDir, benchmark, cfg)
         System.err.println(
           s"[graft] curate: appended $written new rows to $standingDir " +
             s"(delta written to $outDir)")

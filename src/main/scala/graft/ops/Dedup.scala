@@ -945,21 +945,22 @@ object Dedup {
     * given `priorSigs == signatures(prior, ...)` with matching
     * parameters (spec-pinned).
     *
-    * Bloom prefilter: two Blooms over the BATCH side's fingerprints and
-    * band hashes (increment-sized — the d10 trick pointed at the prior)
-    * dismiss prior signature rows that cannot match ANY batch row
-    * before they reach the distinct/join exchanges. With a 10x-100x
-    * prior:batch ratio that removes most of the bipartite join's input
-    * volume (shuffle-records spec-pinned); Bloom false positives only
-    * add candidates, which exact verification then rejects — results
-    * identical (spec-pinned).
+    * Bloom prefilter: a Bloom over the BATCH side's fingerprints
+    * (increment-sized — the d10 trick pointed at the prior) dismisses
+    * prior fingerprints that cannot match ANY batch row before they
+    * reach the fingerprint-distinct exchange. With a 10x-100x
+    * prior:batch ratio that removes most of that exchange's volume
+    * (shuffle-records spec-pinned); false positives only let a prior
+    * fingerprint through, never change a result (spec-pinned). Band
+    * rows get no Bloom: at increment size the band join broadcasts the
+    * batch side, so prior band rows reach no exchange (at d19 sf1 a
+    * band-key Bloom changed no stage's shuffle-write records).
     *
-    * Both Blooms are built in ONE fused `treeAggregate` over the
-    * persisted narrow frame, after the `count()` that populates its
-    * cache and sizes them exactly (an empty batch short-circuits before
-    * any Bloom exists). Sizing only tunes the false-positive rate
-    * (undersizing degrades fpp gracefully, and false positives merely
-    * add candidates), so it can never change results.
+    * The Bloom is built in ONE `treeAggregate` over the persisted
+    * narrow frame, after the `count()` that populates its cache and
+    * sizes it exactly (an empty batch short-circuits before any Bloom
+    * exists). Sizing only tunes the false-positive rate (undersizing
+    * degrades fpp gracefully), so it can never change results.
     *
     * NOTE the call is EAGER: Spark jobs run at call time (batch count,
     * Bloom build, the broadcast-gating candidate count and the
@@ -993,10 +994,6 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newBands = newNarrow.select(col("id"),
       posexplode(col("bands")).as(Seq("band", "bhash")))
-    // (band, bhash) packed into one long key for the Bloom
-    def bandKey(band: Column, bhash: Column): Column =
-      shiftleft(band.cast("long"), 32)
-        .bitwiseOR(bhash.cast("long").bitwiseAND(lit(0xffffffffL)))
     // `count()` is the job that materializes the persisted narrow
     // frame's cache AND yields the exact Bloom sizing (a Catalyst
     // row-count estimate is off by orders of magnitude for narrow rows —
@@ -1010,37 +1007,18 @@ object Dedup {
     // null-text rows hash to a sentinel key (one extra Bloom entry,
     // harmless) rather than NPE-ing the aggregate
     val keyed = newNarrow.select(
-      coalesce(xxhash64(col("fp")), lit(0L)).as("fph"),
-      coalesce(transform(col("bands"),
-        (b: Column, i: Column) => bandKey(i, b)),
-        typedLit(Seq.empty[Long])).as("bkeys"))
+      coalesce(xxhash64(col("fp")), lit(0L)).as("fph"))
     import org.apache.spark.util.sketch.BloomFilter
-    val zero = (BloomFilter.create(nBatch, BloomFpp),
-      BloomFilter.create(nBatch * bands, BloomFpp))
-    val (fpBloomF, bandBloomF) = keyed.rdd.treeAggregate(zero)(
-      seqOp = { (acc, row) =>
-        acc._1.putLong(row.getLong(0))
-        val ks = row.getSeq[Long](1)
-        var i = 0
-        while (i < ks.length) { acc._2.putLong(ks(i)); i += 1 }
-        acc
-      },
-      combOp = { (a, b) =>
-        (a._1.mergeInPlace(b._1).asInstanceOf[BloomFilter],
-          a._2.mergeInPlace(b._2).asInstanceOf[BloomFilter])
-      })
-    val fpBloom =
-      graft.functions.BloomMightContainExpression.serialize(fpBloomF)
-    val bandBloom =
-      graft.functions.BloomMightContainExpression.serialize(bandBloomF)
+    val fpBloom = graft.functions.BloomMightContainExpression.serialize(
+      keyed.rdd.treeAggregate(BloomFilter.create(nBatch, BloomFpp))(
+        seqOp = (acc, row) => { acc.putLong(row.getLong(0)); acc },
+        combOp = (a, b) => a.mergeInPlace(b)))
     val priorFp = priorSigs.select(col("fp"))
       .filter(graft.functions.BloomMightContainExpression.mightContain(
         xxhash64(col("fp")), fpBloom))
       .distinct()
     val oldBands = priorSigs.select(col("id").as("pid"),
         posexplode(col("bands")).as(Seq("band", "bhash")))
-      .filter(graft.functions.BloomMightContainExpression.mightContain(
-        bandKey(col("band"), col("bhash")), bandBloom))
     val freshIds = newNarrow.select(col("id"), col("fp"))
       .join(priorFp, Seq("fp"), "left_anti")
       .select(col("id"))
@@ -1082,8 +1060,8 @@ object Dedup {
   }
 
   /** False-positive rate of [[dedupAgainstSignatures]]' batch-side
-    * Blooms: a false positive only lets one prior signature row through
-    * to the exchanges, never changes a result. */
+    * Bloom: a false positive only lets one prior fingerprint through to
+    * the distinct exchange, never changes a result. */
   private val BloomFpp = 0.01
 
   /** Serialized Bloom filter over `benchmark`'s distinct n-gram hashes —

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -8,11 +9,12 @@ import graft.examples.CurationPipeline
 import graft.ops.Dedup
 import graft.sinks.CorpusWriter
 
-/** Streaming INCREMENTAL curation — the restartable production ingest
-  * that the batch `curate.against` CLI approximates daily: each
-  * micro-batch runs the full gate chain ([[CurationPipeline.curate]])
-  * and then [[Dedup.dedupAgainstSignatures]] against the STANDING
-  * corpus, appending only the surviving delta plus its signature rows —
+/** INCREMENTAL curation against a standing corpus — the restartable
+  * streaming ingest and, through [[processBatch]], the batch
+  * `curate -s curate.against` CLI: each increment runs the full gate
+  * chain ([[CurationPipeline.curate]]) and then
+  * [[Dedup.dedupAgainstSignatures]] against the STANDING corpus,
+  * appending only the surviving delta plus its signature rows —
   * so the standing text is read once per batch (candidate verify) and
   * the exact/band stages touch only the ~1-2%-sized signature table.
   *
@@ -22,8 +24,7 @@ import graft.sinks.CorpusWriter
   * redelivered batch's delta is EMPTY (the restart spec pins this).
   * The corpus append and the signature append are two writes; a crash
   * between them leaves the signature table short, which the next batch
-  * detects by row count and self-heals by rebuilding from the corpus
-  * (the `curate.against` discipline, `Cli.scala`).
+  * detects by row count and self-heals by rebuilding from the corpus.
   *
   * State discipline: this pipeline keeps NO Spark streaming state — the
   * standing corpus + signature table on storage ARE the state, shared
@@ -53,41 +54,49 @@ object IncrementalCuration {
       .withColumn("lang", graft.ops.TextAnalysis.langId(
         graft.ops.TextAnalysis.htmlToText(col("text"))))
 
-  /** One micro-batch: curate, dedup against the standing corpus at
-    * `standingDir`, append delta + signatures. Bootstraps a missing/
-    * empty standing corpus from the first batch. Returns rows appended.
-    * Idempotent on replay (see object doc). Rows whose doc_id already
-    * exists in the standing corpus with DIFFERENT content (a recrawl)
-    * are quarantined to `<standingDir>_rejected` rather than failing
-    * the batch — a thrown batch would replay from the checkpoint
-    * forever. Exposed separately from [[start]] so tests and custom
-    * `foreachBatch` wirings drive the identical code path. */
+  /** One standing-corpus increment — the one implementation behind both
+    * the batch `curate -s curate.against` CLI and the streaming
+    * [[start]]: self-heal the signature table, curate the batch and
+    * dedup it against the standing corpus, write the surviving delta to
+    * `deltaDir`, then append it and its signature rows to the standing
+    * corpus at `standingDir`. Bootstraps a missing/empty standing corpus
+    * from the first batch. Returns rows appended. Idempotent on replay
+    * (see object doc). Rows whose doc_id already exists in the standing
+    * corpus with DIFFERENT content (a recrawl) are quarantined to
+    * `<standingDir>_rejected` rather than appended or thrown — a thrown
+    * stream batch would replay from the checkpoint forever, and a failed
+    * batch re-run would hit the same rows again. */
   def processBatch(spark: SparkSession, batch: DataFrame,
-                   standingDir: String, benchmark: DataFrame,
+                   standingDir: String, deltaDir: String,
+                   benchmark: DataFrame,
                    cfg: CurationPipeline.Config = CurationPipeline.Config())
       : Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(standingDir)
+    val root = new Path(standingDir)
     val fs = root.getFileSystem(conf)
-    def hasParquet(p: org.apache.hadoop.fs.Path): Boolean =
+    // any .parquet file under `dir`, ignoring the `_graft_` side tables
+    // BELOW it (signatures, the stream's delta) — only the corpus root
+    // holds such dirs; the side tables themselves are matched normally
+    def hasParquet(dir: String): Boolean = {
+      val p = new Path(dir)
+      val prefix = fs.makeQualified(p).toUri.getPath
       fs.exists(p) && {
         val it = fs.listFiles(p, true)
         var found = false
         while (!found && it.hasNext) {
-          val f = it.next().getPath
-          found = f.getName.endsWith(".parquet") &&
-            !f.toString.contains("/_graft_")
+          val rel = it.next().getPath.toUri.getPath.stripPrefix(prefix)
+          found = rel.endsWith(".parquet") && !rel.contains("/_graft_")
         }
         found
       }
+    }
     val sigDir = s"$standingDir/_graft_signatures"
-    val deltaTmp = s"$standingDir/_graft_increment_tmp"
+    val partitionCols = Seq("split", "lang")
 
-    if (!hasParquet(root)) {
+    if (!hasParquet(standingDir)) {
       // bootstrap: the first batch IS the corpus
       val curated = CurationPipeline.curate(batch, benchmark, cfg = cfg)
-      CorpusWriter.writeCurated(curated, standingDir,
-        partitionCols = Seq("split", "lang"))
+      CorpusWriter.writeCurated(curated, standingDir, partitionCols)
       val written = spark.read.parquet(standingDir)
       Dedup.signatures(written, "doc_id", "text")
         .write.mode("overwrite").parquet(sigDir)
@@ -95,51 +104,50 @@ object IncrementalCuration {
     }
 
     val standing = spark.read.parquet(standingDir)
-    // self-heal a short signature table (crash between the two appends)
-    val standingN = standing.count()
-    val sigPath = new org.apache.hadoop.fs.Path(sigDir)
-    val sigsOk = hasParquet(sigPath) &&
-      spark.read.parquet(sigDir).count() == standingN
-    if (!sigsOk) {
+    // self-heal: the corpus append and the signature append below are
+    // two writes — a crash between them leaves the table SHORT (rows in
+    // the corpus with no signature), which would let their duplicates
+    // back in. A row-count disagreement (parquet footer counts, cheap)
+    // triggers a full rebuild from the corpus.
+    val hasSigs = hasParquet(sigDir)
+    if (!hasSigs || spark.read.parquet(sigDir).count() != standing.count()) {
+      if (hasSigs) System.err.println(
+        s"[graft] curate: signature table out of sync with $standingDir " +
+          "(interrupted append?) — rebuilding")
       Dedup.signatures(standing, "doc_id", "text")
         .write.mode("overwrite").parquet(sigDir)
     }
-    val priorSigs = spark.read.parquet(sigDir)
-
     val delta = CurationPipeline.curateIncrement(
       batch, benchmark, standing, cfg = cfg,
-      standingSigs = priorSigs)
-    // materialize the delta ONCE (the curation + dedup DAG must not
-    // re-execute per consumer), then read the written copy back
-    delta.write.mode("overwrite").parquet(deltaTmp)
-    val materialized = spark.read.parquet(deltaTmp)
-    val n = materialized.count()
-    var appended = 0L
-    if (n > 0L) {
-      // Same-id-different-content collisions (a recrawled doc_id whose
-      // text changed enough to survive dedup) would corrupt the
-      // append-only corpus. They are QUARANTINED, not thrown: a
-      // require() here would fail the micro-batch, and since the
-      // offending batch replays from the checkpoint on every restart,
-      // one legitimate recrawl would poison the stream permanently.
-      // Colliding rows go to `<standingDir>_rejected` (audit +
-      // reprocess path); clean rows append normally.
-      val standingIds = standing.select("doc_id")
-      val colliding = materialized
-        .join(standingIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      val collisions = colliding.count()
-      if (collisions > 0L) {
-        // replay-idempotent append: a crash after this write but before
-        // the checkpoint commit replays the batch, and the colliding
-        // row would land in quarantine AGAIN (unlike the corpus append,
-        // dedup can't absorb it — the collision is the reason it's
-        // here). Anti-join on (doc_id, content fingerprint) against the
+      standingSigs = spark.read.parquet(sigDir))
+    CorpusWriter.writeCurated(delta, deltaDir, partitionCols)
+    // all further steps read the WRITTEN delta — never the live frame
+    // (a second action would re-execute the curation + dedup DAG) — and
+    // an empty delta leaves no parquet to infer, hence the guard
+    if (!hasParquet(deltaDir)) return 0L
+    val materialized = spark.read.parquet(deltaDir)
+    // Same-id-different-content collisions (a recrawled doc_id whose
+    // text changed enough to survive dedup) would corrupt the
+    // append-only corpus: they go to `<standingDir>_rejected` (audit +
+    // reprocess path) and the clean rows append normally.
+    val standingIds = standing.select("doc_id")
+    val collisions = materialized
+      .join(standingIds, Seq("doc_id"), "left_semi").count()
+    val fresh =
+      if (collisions == 0L) materialized
+      else {
+        // replay-idempotent quarantine: a crash after this write but
+        // before the append (or the stream's offset commit) re-runs the
+        // batch, and the colliding row would land in quarantine AGAIN
+        // (dedup can't absorb it — the collision is why it's here).
+        // Anti-join on (doc_id, content fingerprint) against the
         // already-quarantined rows first.
+        val colliding = materialized
+          .join(standingIds, Seq("doc_id"), "left_semi")
+          .localCheckpoint(true)
         val rejDir = standingDir + "_rejected"
-        val rejPath = new org.apache.hadoop.fs.Path(rejDir)
         val toWrite =
-          if (!hasParquet(rejPath)) colliding
+          if (!hasParquet(rejDir)) colliding
           else colliding.withColumn("_fp", md5(col("text")))
             .join(spark.read.parquet(rejDir)
               .select(col("doc_id"), md5(col("text")).as("_fp")),
@@ -148,28 +156,26 @@ object IncrementalCuration {
         val nNew = toWrite.count()
         if (nNew > 0L) toWrite.write.mode("append").parquet(rejDir)
         System.err.println(
-          s"IncrementalCuration: quarantined $nNew doc_id collisions " +
-            s"to $rejDir ($collisions colliding in batch)")
-      }
-      val fresh =
-        if (collisions == 0L) materialized
-        else materialized.join(standingIds, Seq("doc_id"), "left_anti")
+          s"[graft] curate: quarantined $nNew doc_id collisions to " +
+            s"$rejDir ($collisions colliding in batch)")
+        // materialized now: the anti-join reads the standing corpus,
+        // which the append below changes
+        materialized.join(standingIds, Seq("doc_id"), "left_anti")
           .localCheckpoint(true)
-      appended = n - collisions
-      if (appended > 0L) {
-        CorpusWriter.appendCurated(fresh, standingDir,
-          partitionCols = Seq("split", "lang"))
-        Dedup.signatures(fresh, "doc_id", "text")
-          .write.mode("append").parquet(sigDir)
       }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(deltaTmp), true)
-    appended
+    CorpusWriter.appendCurated(fresh, standingDir, partitionCols)
+    // keep the signature table in lockstep with the corpus: the next
+    // increment's exact/band stages never re-read this delta's text
+    Dedup.signatures(fresh, "doc_id", "text")
+      .write.mode("append").parquet(sigDir)
+    materialized.count() - collisions
   }
 
   /** Wire [[processBatch]] into a streaming source. The checkpoint
     * tracks source offsets only; restarts resume from the last
-    * committed offset and any replayed batch appends nothing. */
+    * committed offset and any replayed batch appends nothing. Each
+    * batch's delta goes to `<standingDir>/_graft_increment_tmp`
+    * (invisible to corpus reads) and is deleted once appended. */
   def start(stream: DataFrame, standingDir: String, benchmark: DataFrame,
             checkpointDir: String,
             cfg: CurationPipeline.Config = CurationPipeline.Config(),
@@ -178,7 +184,11 @@ object IncrementalCuration {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (b: DataFrame, _: Long) =>
-        processBatch(b.sparkSession, b, standingDir, benchmark, cfg)
+        val deltaTmp = new Path(s"$standingDir/_graft_increment_tmp")
+        processBatch(b.sparkSession, b, standingDir, deltaTmp.toString,
+          benchmark, cfg)
+        deltaTmp.getFileSystem(b.sparkSession.sessionState.newHadoopConf())
+          .delete(deltaTmp, true)
         ()
       }
       .start()

@@ -253,6 +253,49 @@ class CliSpec extends SparkSpec {
       "increment output must be byte-deterministic")
   }
 
+  test("curate.against quarantines a recrawled doc_id with new text and appends the rest") {
+    import spark.implicits._
+    def mkText(i: Long): String = {
+      val r = new scala.util.Random(i)
+      ("the of and to in a " * 3) +
+        (0 until 30).map(_ => s"w${r.nextInt(500)}").mkString(" ")
+    }
+    val seedDir = java.nio.file.Files.createTempDirectory("cli-col-seed").toString
+    (1L to 12L).map(i => (i, mkText(i), "en")).toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(seedDir)
+    val standing = java.nio.file.Files.createTempDirectory("cli-col-std").toString
+    Cli.run(Seq("curate", "-o", standing, seedDir), spark, new FakeTransport())
+    val standingN = spark.read.parquet(standing).count()
+    val oldText = spark.read.parquet(standing).filter(col("doc_id") === 3L)
+      .select("text").as[String].collect().toSeq
+    assert(oldText == Seq(mkText(3L)))
+    // doc_id 3 comes back with novel text (survives the dedup), doc 601
+    // is new
+    val inDir = java.nio.file.Files.createTempDirectory("cli-col-in").toString
+    Seq((3L, mkText(777L), "en"), (601L, mkText(601L), "en"))
+      .toDF("doc_id", "text", "lang").write.mode("overwrite").parquet(inDir)
+    def increment(): Unit = Cli.run(Seq("curate",
+      "-o", java.nio.file.Files.createTempDirectory("cli-col-d").toString,
+      "-s", s"curate.against=$standing", inDir), spark, new FakeTransport())
+    increment()
+    val corpus = spark.read.parquet(standing)
+    assert(corpus.filter(col("doc_id") === 3L).select("text").as[String]
+      .collect().toSeq == oldText, "the standing row stays, exactly once")
+    assert(corpus.filter(col("doc_id") === 601L).count() == 1L)
+    assert(corpus.count() == standingN + 1)
+    val rejected = spark.read.parquet(standing + "_rejected")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    assert(rejected == Seq((3L, mkText(777L))),
+      "the recrawl lands in the quarantine sink")
+    assert(spark.read.parquet(s"$standing/_graft_signatures").count() ==
+      corpus.count(), "signature table in lockstep with the corpus")
+    // a re-run of the same input appends nothing and quarantines nothing
+    // twice
+    increment()
+    assert(spark.read.parquet(standing).count() == standingN + 1)
+    assert(spark.read.parquet(standing + "_rejected").count() == 1L)
+  }
+
   test("curate.stream: streaming incremental mode appends once, restart resumes from checkpoint") {
     import spark.implicits._
     def mkDocs(ids: Seq[Long]) = ids.map { i =>

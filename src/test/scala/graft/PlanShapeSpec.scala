@@ -339,9 +339,9 @@ class PlanShapeSpec extends SparkSpec {
     // r13 eager prefilter shape, three actions: (1) newNarrow.count()
     // — the job that builds the persisted narrow cache AND yields the
     // exact Bloom sizing (estimate-based sizing measured ~0.8 fpp =
-    // pass-everything); (2) ONE fused treeAggregate filling BOTH
-    // Blooms from the cache (was two stat.bloomFilter source
-    // re-executions); (3) cand.count() — materializes the candidate
+    // pass-everything); (2) ONE treeAggregate filling the fingerprint
+    // Bloom from the cache (never a source re-execution); (3)
+    // cand.count() — materializes the candidate
     // checkpoint and gates the verify semi-join's broadcast hint.
     // (3) is AQE-multi-job (join stages), hence 5 not 3. r16: +5 for
     // the self-releasing eager survivor-id materialization that frees

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import graft.SparkSpec
-import graft.examples.CurationPipeline
+import graft.{Cli, SparkSpec}
+import graft.sinks.FakeTransport
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,6 +23,14 @@ class IncrementalCurationSpec extends SparkSpec {
 
   private def benchmark = Seq.empty[String].toDF("text")
 
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** one increment against `standingDir`, its delta to a fresh dir */
+  private def increment(batch: DataFrame, standingDir: String): Long =
+    IncrementalCuration.processBatch(spark, batch, standingDir,
+      tmpDir("inc-delta"), benchmark)
+
   test("streaming increments: exactly-once across restart, replay appends nothing, batch parity") {
     val standingDir = java.nio.file.Files.createTempDirectory("inc-standing").toString
     val incomingDir = java.nio.file.Files.createTempDirectory("inc-in").toString
@@ -29,7 +38,7 @@ class IncrementalCurationSpec extends SparkSpec {
 
     // seed the standing corpus (the batch path's writer + signatures)
     val seed = mkDocs(1L to 20L)
-    IncrementalCuration.processBatch(spark, seed, standingDir, benchmark)
+    increment(seed, standingDir)
     val seededN = spark.read.parquet(standingDir).count()
     assert(seededN > 0)
 
@@ -63,8 +72,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // REPLAY: driving the same batch again appends nothing (the dedup
     // is the idempotence mechanism — a crashed-after-append batch that
     // gets redelivered finds all its rows exact-matched)
-    assert(IncrementalCuration.processBatch(
-      spark, inc1, standingDir, benchmark) == 0L)
+    assert(increment(inc1, standingDir) == 0L)
     assert(spark.read.parquet(standingDir).count() == afterTwo.count())
 
     // RESTART from checkpoint with a new file: only inc3 is processed
@@ -77,13 +85,20 @@ class IncrementalCurationSpec extends SparkSpec {
     val finalIds = finalStream.select("doc_id").as[Long].collect().toSet
     assert((301L to 305L).toSet.subsetOf(finalIds))
     assert(finalStream.groupBy("doc_id").count().filter(col("count") > 1).count() == 0)
+    assert(!new java.io.File(s"$standingDir/_graft_increment_tmp").exists(),
+      "the stream deletes each batch's delta once appended")
 
-    // PARITY: the batch curate.against path over the same replay
-    // (seed, inc1, inc2, inc3 in order) produces the identical corpus
-    val batchDir = java.nio.file.Files.createTempDirectory("inc-batch").toString
-    IncrementalCuration.processBatch(spark, seed, batchDir, benchmark)
-    for (inc <- Seq(inc1, inc2, inc3))
-      IncrementalCuration.processBatch(spark, inc, batchDir, benchmark)
+    // PARITY: the batch `curate -s curate.against` CLI over the same
+    // replay (seed, inc1, inc2, inc3 in order) produces the identical
+    // corpus
+    val batchDir = tmpDir("inc-batch")
+    val seedDir = tmpDir("inc-seed")
+    seed.write.mode("overwrite").parquet(seedDir)
+    Cli.run(Seq("curate", "-o", batchDir, seedDir), spark, new FakeTransport())
+    for (inc <- Seq("inc1", "inc2", "inc3"))
+      Cli.run(Seq("curate", "-o", tmpDir("inc-delta"),
+        "-s", s"curate.against=$batchDir", s"$incomingDir/$inc"),
+        spark, new FakeTransport())
     val batchRows = spark.read.parquet(batchDir)
       .select("doc_id", "text", "split").as[(Long, String, String)]
       .collect().toSet
@@ -99,14 +114,14 @@ class IncrementalCurationSpec extends SparkSpec {
 
   test("doc_id collision with changed content: quarantined, batch survives") {
     val standingDir = java.nio.file.Files.createTempDirectory("inc-coll").toString
-    IncrementalCuration.processBatch(spark, mkDocs(1L to 12L), standingDir, benchmark)
+    increment(mkDocs(1L to 12L), standingDir)
     // a recrawl: doc_id 3 returns with COMPLETELY different (novel)
     // content — it survives dedup but may not overwrite the standing
     // row; a throw here would poison the checkpoint-replayed stream
     val recrawl = mkDocs(Seq(777L)).select(
       lit(3L).as("doc_id"), col("text"), col("lang"))
-    val appended = IncrementalCuration.processBatch(
-      spark, recrawl.unionByName(mkDocs(Seq(601L))), standingDir, benchmark)
+    val appended =
+      increment(recrawl.unionByName(mkDocs(Seq(601L))), standingDir)
     assert(appended == 1L, "only the novel doc appends; collision is quarantined")
     val corpus = spark.read.parquet(standingDir)
     assert(corpus.filter(col("doc_id") === 3L).count() == 1L,
@@ -122,8 +137,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // the offset commit redelivers the batch — the collision recurs
     // (its content still differs from standing) but must not quarantine
     // a second copy, and the novel doc still appends nothing
-    val replayAppended = IncrementalCuration.processBatch(
-      spark, recrawl.unionByName(mkDocs(Seq(601L))), standingDir, benchmark)
+    val replayAppended =
+      increment(recrawl.unionByName(mkDocs(Seq(601L))), standingDir)
     assert(replayAppended == 0L)
     assert(spark.read.parquet(standingDir + "_rejected").count() == 1L,
       "replayed collision must not duplicate in quarantine")
@@ -131,7 +146,7 @@ class IncrementalCurationSpec extends SparkSpec {
 
   test("self-heal: a short signature table is rebuilt before the increment") {
     val standingDir = java.nio.file.Files.createTempDirectory("inc-heal").toString
-    IncrementalCuration.processBatch(spark, mkDocs(1L to 12L), standingDir, benchmark)
+    increment(mkDocs(1L to 12L), standingDir)
     // simulate a crash between corpus append and signature append:
     // truncate the signature table to half its rows
     val sigDir = s"$standingDir/_graft_signatures"
@@ -144,10 +159,29 @@ class IncrementalCurationSpec extends SparkSpec {
     // table returns to lockstep
     val dupAgain = mkDocs(Seq(5L, 6L)).select(
       (col("doc_id") + 7000L).as("doc_id"), col("text"), col("lang"))
-    val appended = IncrementalCuration.processBatch(
-      spark, dupAgain.unionByName(mkDocs(Seq(501L))), standingDir, benchmark)
+    val appended =
+      increment(dupAgain.unionByName(mkDocs(Seq(501L))), standingDir)
     val corpus = spark.read.parquet(standingDir)
     assert(appended == 1L, "only the novel doc may append after the heal")
     assert(spark.read.parquet(sigDir).count() == corpus.count())
+  }
+
+  test("an in-sync signature table is appended to, never rebuilt") {
+    val standingDir = tmpDir("inc-sync")
+    val sigDir = new java.io.File(s"$standingDir/_graft_signatures")
+    def parts(): Set[String] =
+      sigDir.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+    increment(mkDocs(1L to 12L), standingDir)
+    assert(increment(mkDocs(101L to 104L), standingDir) > 0L)
+    val before = parts()
+    assert(before.nonEmpty)
+    // a rebuild overwrites every part file; an append only adds its own
+    assert(increment(mkDocs(201L to 204L), standingDir) > 0L)
+    val after = parts()
+    assert(before.subsetOf(after),
+      s"signature table was rewritten: lost ${before -- after}")
+    assert(after.size > before.size)
+    assert(spark.read.parquet(sigDir.toString).count() ==
+      spark.read.parquet(standingDir).count())
   }
 }

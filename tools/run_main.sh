@@ -4,7 +4,10 @@
 # never overlap two sbt processes on this repo). Mirrors build.sbt's
 # forked-JVM options (JDK-17 add-opens, a pinned and pre-touched heap of
 # SPARK_DRIVER_MEM or else half of MemTotal within [2g, 24g], 2g code
-# cache, UTC).
+# cache, UTC). src/main/resources rides the class path so a tree built
+# by a plain `sbt compile` (resources not copied to classes/) still finds
+# translation_maps/, the DataSourceRegister service file and
+# bpe_merges.txt.
 #   tools/run_main.sh graft.Bench
 #   SPARK_GRAFT_SF_DIR=target/sf10 tools/run_main.sh graft.Bench
 #   tools/run_main.sh graft.tools.ScaleData /root/testdata/sf0.1 target/sf10 100
@@ -26,4 +29,4 @@ exec java "${FLAGS[@]}" \
   "-Xms$SPARK_DRIVER_MEM" "-Xmx$SPARK_DRIVER_MEM" -XX:+AlwaysPreTouch \
   -XX:ReservedCodeCacheSize=2g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" "$@"
