@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, Success, TaskKilled}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
@@ -34,9 +34,11 @@ final case class StageCost(id: Int, name: String, runS: Double)
   *
   * Stage, task and executor counters (`taskRunS`, `taskCpuS`, `taskGcS`,
   * input, shuffle, spill) sum over both phases. `spillBytes` is memory
-  * plus disk spill. The persisted-RDD counters are read before the build
-  * and after the action; `codegenCompiles` and `processCpuS` are JVM-wide
-  * deltas over the window.
+  * plus disk spill. `failedTasks` counts the tasks that ended in an
+  * exception or another failure; killed tasks are not counted. The
+  * persisted-RDD counters are read before the build and after the
+  * action; `codegenCompiles` and `processCpuS` are JVM-wide deltas over
+  * the window.
   */
 final case class QueryProfile(
     constructS: Double,
@@ -49,6 +51,7 @@ final case class QueryProfile(
     execJobs: Long,
     stages: Long,
     tasks: Long,
+    failedTasks: Long,
     taskRunS: Double,
     taskCpuS: Double,
     taskGcS: Double,
@@ -87,6 +90,7 @@ object QueryProfile {
   // SparkContext.SPARK_JOB_GROUP_ID, which Spark keeps private
   private val JobGroupKey = "spark.jobGroup.id"
   private val runs = new AtomicLong()
+  private val JobWaitNs = 60L * 1000000000L
   // listener events carry wall-clock milliseconds; map them onto nanoTime
   private val nanoAtEpochMs = System.nanoTime() - System.currentTimeMillis() * 1000000L
 
@@ -97,7 +101,10 @@ object QueryProfile {
     * when it ran; the caller's group is restored afterwards. Construct
     * and exec seconds cover exactly `build` and `action`: the storage
     * reads happen before `build` starts, and the listener-bus drain and
-    * the closing storage read after `action` returns. */
+    * the closing storage read after `action` returns. The window closes
+    * only once every job started inside it has ended, so a job that
+    * outlives the action (an adaptive stage a replan dropped) is counted
+    * with its tasks, failed ones included. */
   def run[F, A](spark: SparkSession, label: String)(build: => F)(action: F => A)
       : (A, QueryProfile) = {
     val sc = spark.sparkContext
@@ -121,6 +128,7 @@ object QueryProfile {
       val compiles = codegenCompiles - compiles0
       val cpuNs = processCpuNs - cpu0
       ListenerBridge.drain(sc)
+      rec.awaitJobs()
       val (rddsAfter, bytesAfter) = storage(sc)
       val profile = rec.synchronized {
         val inJobNs = covered(rec.execJobs.values.map { case (a, b) =>
@@ -143,6 +151,7 @@ object QueryProfile {
           execJobs = rec.execJobs.size,
           stages = st.size,
           tasks = sum(_.tasks),
+          failedTasks = sum(_.failed),
           taskRunS = sum(_.runMs) / 1e3,
           taskCpuS = sum(_.cpuNs) / 1e9,
           taskGcS = sum(_.gcMs) / 1e3,
@@ -171,7 +180,7 @@ object QueryProfile {
   }
 
   private final class Stage(val name: String) {
-    var tasks, runMs, cpuNs, gcMs, inputBytes, inputRecords, shuffleReadBytes,
+    var tasks, failed, runMs, cpuNs, gcMs, inputBytes, inputRecords, shuffleReadBytes,
       shuffleReadRecords, shuffleWriteBytes, shuffleWriteRecords, spillBytes = 0L
   }
 
@@ -186,6 +195,8 @@ object QueryProfile {
     private val actionSites = mutable.Map.empty[String, String]
     // exec job id -> (start, end) in epoch ms; end -1 until the job ends
     val execJobs = mutable.Map.empty[Int, (Long, Long)]
+    // jobs of either phase that have started and not yet ended
+    private val running = mutable.Set.empty[Int]
     val stages = mutable.Map.empty[Int, Stage]
     // (start epoch ms, duration ms) of every planning phase seen
     val phases = mutable.ArrayBuffer.empty[(Long, Long)]
@@ -195,6 +206,7 @@ object QueryProfile {
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val g = groupOf(e.properties)
+      if (g == constructGroup || g == execGroup) running += e.jobId
       if (g == constructGroup) {
         val site = Option(e.properties.getProperty("spark.sql.execution.id"))
           .flatMap(actionSites.get)
@@ -204,6 +216,14 @@ object QueryProfile {
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       execJobs.get(e.jobId).foreach { case (a, _) => execJobs(e.jobId) = (a, e.time) }
+      if (running.remove(e.jobId)) notifyAll()
+    }
+    /** Block until every job seen starting has ended (bounded, so a job
+      * that never ends cannot hang the caller). Task ends are posted
+      * before their job's end, so they have been counted by then. */
+    def awaitJobs(): Unit = synchronized {
+      val deadline = System.nanoTime() + JobWaitNs
+      while (running.nonEmpty && System.nanoTime() < deadline) wait(100)
     }
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case x: SparkListenerSQLExecutionStart if x.jobGroupId.contains(constructGroup) =>
@@ -219,6 +239,10 @@ object QueryProfile {
         stages.getOrElseUpdate(e.stageInfo.stageId, new Stage(e.stageInfo.name))
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (s <- stages.get(e.stageId)) e.reason match {
+        case Success | _: TaskKilled =>
+        case _ => s.failed += 1
+      }
       for (s <- stages.get(e.stageId); m <- Option(e.taskMetrics)) {
         s.tasks += 1
         s.runMs += m.executorRunTime

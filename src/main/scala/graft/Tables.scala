@@ -28,18 +28,25 @@ object Tables {
   // SparkSession, so the value map kept the weak key reachable and
   // nothing ever evicted. A bounded access-order LRU makes retention
   // explicit instead of fictional: at most MaxSessions sessions' memos
-  // are held (a dead session's few plan handles linger only until
-  // MaxSessions newer sessions appear — bounded, not a leak).
-  private val MaxSessions = 8
-  private val relCache =
-    new java.util.LinkedHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]](
-        16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession,
-            java.util.concurrent.ConcurrentHashMap[String, DataFrame]]) =
-        size > MaxSessions
-    }
+  // are held, and a stopped session's memo is evicted before any live
+  // session's, so dead sessions never push out a live one.
+  private[graft] val MaxSessions = 8
+  private val relCache = new SessionLru[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, DataFrame]](
+    MaxSessions, _.sparkContext.isStopped)
+
+  /** Access-order LRU of at most `max` entries that, when full, evicts
+    * an entry whose key is `stopped` before the least recently used. */
+  private[graft] final class SessionLru[K, V](max: Int, stopped: K => Boolean)
+      extends java.util.LinkedHashMap[K, V](16, 0.75f, /*accessOrder=*/ true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+      size > max && {
+        val it = keySet.iterator
+        var dead = false
+        while (!dead && it.hasNext) if (stopped(it.next())) { it.remove(); dead = true }
+        !dead
+      }
+  }
 
   private def memo(spark: SparkSession, key: String)(
       build: => DataFrame): DataFrame = {

@@ -2,7 +2,8 @@ package graft.crawl
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.graftbridge.FrameScope
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.TextAnalysis
 
@@ -22,7 +23,7 @@ import graft.ops.TextAnalysis
   * exactly like distributed BFS. Rounds are localCheckpoint barriers
   * (flat lineage — depth-d lineage would re-FETCH the whole crawl on a
   * retry), with superseded rounds freed deterministically
-  * (CheckpointBridge, the pageRank discipline) so a long crawl does not
+  * (FrameScope, the pageRank discipline) so a long crawl does not
   * strand storage. Depth and per-round frontier size are loud bounds:
   * the web is unbounded by construction, so an un-scoped crawl failing
   * fast beats one that OOMs the visited set three hours in.
@@ -109,34 +110,17 @@ object Crawl {
     require(maxFrontierPerRound >= 1,
       s"maxFrontierPerRound must be positive: $maxFrontierPerRound")
 
-    var frontier = seeds
-      .select(TextAnalysis.canonicalUrl(col("url")).as("url"))
-      .filter(col("url").isNotNull).distinct()
-      .localCheckpoint(false)
-    var visited = frontier
-    var marks: DataFrame = null // accumulated (domain, last_fetch_ms)
-    var prevFrontier: DataFrame = null
-    var prevVisited: DataFrame = null
-    var prevMarks: DataFrame = null
-    var pending: Seq[DataFrame] = Nil // mid-round frames not yet in slots
-    var rounds = Vector.empty[DataFrame]
-    var depth = 0
-    // round 0 always runs — on an empty seed set it fetches nothing and
-    // the output is the (correctly-schemad) empty archive, total for free
-    var drained = false
-    // every loop frame, deduped by reference (visited aliases frontier in
-    // round 0), freed on BOTH exits — the result path after the final
-    // union is materialized, and the throw path (frontier explosion, a
-    // failed round), where the stranded frames are by definition the
-    // biggest of the crawl
-    def freeAll(): Unit = {
-      val live = (rounds ++ Seq(prevFrontier, prevVisited, prevMarks,
-        frontier, visited, marks) ++ pending).filter(_ ne null)
-      live.zipWithIndex
-        .filter { case (df, i) => live.take(i).forall(_ ne df) }
-        .foreach { case (df, _) => CheckpointBridge.unpersist(df) }
-    }
-    try {
+    FrameScope(seeds.sparkSession) { s =>
+      var frontier = s.checkpoint(seeds
+        .select(TextAnalysis.canonicalUrl(col("url")).as("url"))
+        .filter(col("url").isNotNull).distinct())
+      var visited = frontier
+      var marks: DataFrame = null // accumulated (domain, last_fetch_ms)
+      var archives = Vector.empty[DataFrame] // one fetched round per depth
+      var depth = 0
+      // round 0 always runs — on an empty seed set it fetches nothing and
+      // the output is the (correctly-schemad) empty archive, total for free
+      var drained = false
       while (depth <= maxDepth && !drained) {
         // EAGER: fetching is the externally-visible side effect — it must
         // run exactly once per round, here, not wherever a lazy plan
@@ -145,15 +129,9 @@ object Crawl {
         // DISK_ONLY: the archive is read exactly twice (link extraction
         // now, the final union later) — body-sized blocks have no
         // business in storage memory squeezing the execution pool
-        val fetched = Fetch.fetchFrontier(frontier, cfg)
-          .withColumn("depth", lit(depth))
-          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        // mid-crawl, cap-deferred rows leave the archive (they re-fetch
-        // next round — keeping them would duplicate their url); at the
-        // final depth they stay as status-marker rows (nothing lost)
-        rounds :+= (if (cfg.maxPerHostPerRound > 0 && depth < maxDepth)
-          fetched.filter(col("status") =!= Fetch.StatusDeferred)
-        else fetched)
+        val fetched = s.checkpoint(Fetch.fetchFrontier(frontier, cfg)
+          .withColumn("depth", lit(depth)), eager = true, StorageLevel.DISK_ONLY)
+        archives :+= fetched
         if (depth == maxDepth) drained = true
         else {
           val pages = fetched
@@ -161,7 +139,7 @@ object Crawl {
               col("content_type").startsWith("text/html"))
           // visited ∪ this round's hop urls gates discovery; the union is
           // what future rounds must remember, so it IS the next visited
-          val seen = visited.union(hopUrls(fetched)).localCheckpoint(false)
+          val seen = s.checkpoint(visited.union(hopUrls(fetched)))
           // accumulated politeness floors: max mark per host across all
           // rounds so far — a host resurfacing rounds later still waits
           // out its crawl-delay from its LAST actual fetch. Only when a
@@ -172,11 +150,10 @@ object Crawl {
           // shuffle per round for a column [[Fetch]] would ignore.
           val newMarks =
             if (cfg.defaultDelayMs <= 0) null
-            else (if (marks == null) roundMarks(fetched)
+            else s.checkpoint(if (marks == null) roundMarks(fetched)
               else marks.unionByName(roundMarks(fetched))
                 .groupBy(col("domain"))
                 .agg(max(col("last_fetch_ms")).as("last_fetch_ms")))
-              .localCheckpoint(false)
           val discovered = roundLinks(pages, scope)
             .join(seen, Seq("url"), "left_anti")
           // cap-deferred overflow re-queues here: already visited (it
@@ -188,14 +165,12 @@ object Crawl {
             else discovered.unionByName(
               fetched.filter(col("status") === Fetch.StatusDeferred)
                 .select("url"))
-          val next =
-            (if (newMarks == null) fresh
-             else fresh
-               .withColumn("domain", Fetch.urlDomain(col("url")))
-               .join(newMarks, Seq("domain"), "left")
-               .select(col("url"), col("domain"), col("last_fetch_ms")))
-              .localCheckpoint(false)
-          pending = Seq(seen, newMarks, next).filter(_ ne null)
+          val next = s.checkpoint(
+            if (newMarks == null) fresh
+            else fresh
+              .withColumn("domain", Fetch.urlDomain(col("url")))
+              .join(newMarks, Seq("domain"), "left")
+              .select(col("url"), col("domain"), col("last_fetch_ms")))
           val n = next.count() // materializes; doubles as the runaway gauge
           drained = n == 0L
           if (n > maxFrontierPerRound)
@@ -204,38 +179,34 @@ object Crawl {
                 s"URLs (bound $maxFrontierPerRound). Tighten `scope` (host " +
                 "allowlist / path prefix) or raise maxFrontierPerRound if the " +
                 "storage budget genuinely covers it.")
-          if (drained) {
-            CheckpointBridge.unpersist(next)
-            CheckpointBridge.unpersist(seen)
-            if (newMarks ne null) CheckpointBridge.unpersist(newMarks)
-            pending = Nil
-          } else {
-            // the round before last is provably dead (this round's frames
-            // are materialized); free it deterministically
-            if (prevFrontier ne null) CheckpointBridge.unpersist(prevFrontier)
-            if ((prevVisited ne null) && (prevVisited ne prevFrontier))
-              CheckpointBridge.unpersist(prevVisited)
-            if (prevMarks ne null) CheckpointBridge.unpersist(prevMarks)
-            prevFrontier = frontier
-            prevVisited = visited
-            prevMarks = marks
-            visited = visited.union(next.select("url")).union(hopUrls(fetched))
-              .localCheckpoint(false)
-            CheckpointBridge.unpersist(seen) // superseded by new visited
-            pending = Nil
+          if (drained) s.free(next, seen, newMarks)
+          else {
+            val nextVisited = s.checkpoint(visited.union(next.select("url"))
+              .union(hopUrls(fetched)))
+            // this round's frames are materialized: the round before it,
+            // and `seen` (superseded by nextVisited), are dead
+            s.retain(archives ++ Seq(frontier, visited, marks, next, newMarks,
+              nextVisited): _*)
+            visited = nextVisited
             marks = newMarks
             frontier = next
           }
         }
         depth += 1
       }
-    } catch { case t: Throwable => freeAll(); throw t }
-    // EAGER final materialization, then free every loop frame — the
-    // per-round archives, the frontier/visited chain — so the session
-    // settles back to (exactly) the one result checkpoint
-    val out = rounds.reduce(_ unionByName _).localCheckpoint(true)
-    freeAll()
-    out
+      // EAGER final materialization; the scope then frees every loop
+      // frame — the per-round archives, the frontier/visited chain — on
+      // this path and on a throw (frontier explosion, a failed round),
+      // where the stranded frames are by definition the biggest of the
+      // crawl. Mid-crawl, cap-deferred rows leave the archive (they
+      // re-fetch next round — keeping them would duplicate their url);
+      // at the final depth they stay as status-marker rows.
+      archives.zipWithIndex.map { case (fetched, d) =>
+        if (cfg.maxPerHostPerRound > 0 && d < maxDepth)
+          fetched.filter(col("status") =!= Fetch.StatusDeferred)
+        else fetched
+      }.reduce(_ unionByName _).localCheckpoint(true)
+    }
   }
 
   /** The RESTARTABLE production form of [[bfs]]: each round's archive

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameScope
 import org.apache.spark.util.LongAccumulator
 
 import graft.sinks.WarcWriter
@@ -774,15 +775,14 @@ object Fetch {
         else {
           // two consumers, one side effect: checkpoint the batch so the
           // fetch executes exactly once, then write archive + audit from
-          // the blocks; release them before the marker commits
-          val once = fetched.localCheckpoint(true)
-          try {
+          // the blocks; the scope frees them before the marker commits
+          FrameScope(spark) { s =>
+            val once = s.checkpoint(fetched, eager = true)
             WarcWriter.write(toWarcRows(once, cfg.warcDate, cfg.warcHops),
               outDir, gzip = cfg.gzip, prefix = prefix, clear = false)
             once.drop("body").write.mode("overwrite")
               .parquet(f"$auditDir/batch-$i%05d")
-          } finally
-            org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(once)
+          }
         }
         // atomic commit: tmp + rename, the stream metadata-log pattern
         val tmp = new Path(ckptPath, f".batch-$i%05d.tmp")

@@ -2,6 +2,7 @@ package graft.examples
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameScope
 
 import graft.ops.{Clustering, Dedup, Sampling, TextAnalysis}
 import graft.sinks.CorpusWriter
@@ -55,12 +56,9 @@ object CurationPipeline {
       // re-executions in the default lazy shape). For INCREMENT-scale
       // inputs that fit executor storage — a corpus-scale batch should
       // stay lazy (text is the big column; at 100 TB you materialize
-      // between stages with a write, not a cache). SELF-RELEASING: the
-      // curated output is eagerly materialized and the cached working
-      // set unpersisted before curate() returns, so repeated curations
-      // in one session never accumulate stranded MEMORY_AND_DISK copies
-      // (the r15 in-session decay: every t45/w02 bench execution parked
-      // another corpus-text copy until the whole pool degraded).
+      // between stages with a write, not a cache). The curated output is
+      // then eagerly materialized and the cached working set freed
+      // before curate() returns (see FrameScope).
       cacheWorkingSet: Boolean = false,
       // repair cp1252/Latin-1 mojibake before canonicalization (the
       // conservative round-trip rule — clean accented text never
@@ -114,122 +112,114 @@ object CurationPipeline {
              idCol: String = "doc_id", textCol: String = "text",
              langCol: String = "lang",
              cfg: Config = Config()): DataFrame = {
-    // -1. raw-HTML ingest: extract plain text in the scan stage (narrow
-    // kernel) so every downstream gate sees clean text; empty
-    // extractions (pure-markup pages) drop here
-    val textual =
-      if (!cfg.htmlInput) docs
-      else docs.withColumn(textCol,
-          if (cfg.htmlMainContent) TextAnalysis.htmlMainText(col(textCol))
-          else TextAnalysis.htmlToText(col(textCol)))
-        .filter(length(col(textCol)) > 0)
+    FrameScope(docs.sparkSession) { s =>
+      // -1. raw-HTML ingest: extract plain text in the scan stage (narrow
+      // kernel) so every downstream gate sees clean text; empty
+      // extractions (pure-markup pages) drop here
+      val textual =
+        if (!cfg.htmlInput) docs
+        else docs.withColumn(textCol,
+            if (cfg.htmlMainContent) TextAnalysis.htmlMainText(col(textCol))
+            else TextAnalysis.htmlToText(col(textCol)))
+          .filter(length(col(textCol)) > 0)
 
-    // 0. canonicalize bytes before anything hashes them (narrow
-    // kernels; optional mojibake repair first — same scan stage)
-    val repaired =
-      if (!cfg.fixEncoding) textual
-      else textual.withColumn(textCol, TextAnalysis.fixMojibake(col(textCol)))
-    val canon0 = repaired.withColumn(textCol,
-      TextAnalysis.normalizeNfc(col(textCol), stripControls = true))
-    val canon =
-      if (cfg.cacheWorkingSet)
-        canon0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else canon0
+      // 0. canonicalize bytes before anything hashes them (narrow
+      // kernels; optional mojibake repair first — same scan stage)
+      val repaired =
+        if (!cfg.fixEncoding) textual
+        else textual.withColumn(textCol, TextAnalysis.fixMojibake(col(textCol)))
+      val canon0 = repaired.withColumn(textCol,
+        TextAnalysis.normalizeNfc(col(textCol), stripControls = true))
+      val canon = if (cfg.cacheWorkingSet) s.persist(canon0) else canon0
 
-    // 1. exact dedup: min-id survivor per normalized-content fingerprint.
-    // The anti-join form shuffles only (fingerprint, id) pairs — the
-    // window form would move every document body through the exchange
-    val exact = Dedup.exactDedupAnti(
-      canon, TextAnalysis.fingerprintMd5(col(textCol)), idCol)
+      // 1. exact dedup: min-id survivor per normalized-content fingerprint.
+      // The anti-join form shuffles only (fingerprint, id) pairs — the
+      // window form would move every document body through the exchange
+      val exact = Dedup.exactDedupAnti(
+        canon, TextAnalysis.fingerprintMd5(col(textCol)), idCol)
 
-    // 2. near-dup dedup (LSH pairs -> components -> survivor election:
-    // min-id by default, best-score with cfg.electSurvivorBy)
-    val uniq = cfg.electSurvivorBy match {
-      case Some(score) =>
-        Dedup.nearDupDedupBy(exact, idCol, textCol, score,
-          cfg.nearDupThreshold)
-      case None =>
-        Dedup.nearDupDedup(exact, idCol, textCol, cfg.nearDupThreshold)
+      // 2. near-dup dedup (LSH pairs -> components -> survivor election:
+      // min-id by default, best-score with cfg.electSurvivorBy)
+      val uniq = cfg.electSurvivorBy match {
+        case Some(score) =>
+          Dedup.nearDupDedupBy(exact, idCol, textCol, score,
+            cfg.nearDupThreshold)
+        case None =>
+          Dedup.nearDupDedup(exact, idCol, textCol, cfg.nearDupThreshold)
+      }
+
+      // 3. decontamination: drop docs overlapping the held-out benchmark.
+      // Bloom-prefiltered: the clean majority never reaches the join
+      val contaminated = Dedup.bloomContamination(uniq, benchmark, idCol, textCol)
+        .filter(col("n_overlap") > cfg.maxBenchmarkOverlap)
+        .select(col("doc_id").as(idCol))
+      val decon = uniq.join(contaminated, Seq(idCol), "left_anti")
+
+      // 3.5 optional cross-document passage dedup: doc-level dedup above
+      // removed whole near-duplicates; this removes the SPANS that still
+      // repeat across surviving docs (boilerplate, license blocks). The
+      // cleaned text re-attaches by id join (narrow cols ride the join,
+      // the rebuilt text comes from the dedup side); scrubbed-empty docs
+      // drop here so later stages never see token-less rows
+      val clean = cfg.passageDedupWindow.fold(decon) { w =>
+        val scrubbed = Dedup.removeDuplicatePassages(decon, idCol, textCol, w)
+          .filter(col("n_tokens") > col("n_removed"))
+          .select(col(idCol), col("clean_text").as(textCol))
+        decon.drop(textCol).join(scrubbed, Seq(idCol))
+      }
+
+      // 4-5. narrow tail: quality gates, PII scrub
+      val gated = clean
+        .filter(TextAnalysis.qualityScore(col(textCol)) >= cfg.minQuality)
+        .filter(TextAnalysis.duplicateNgramRatio(col(textCol), 3) <= cfg.maxDup3Ratio)
+        .filter(TextAnalysis.topTokenFraction(col(textCol)) <= cfg.maxTopTokenFraction)
+        .filter(cfg.compressionBand.fold(lit(true)) { case (lo, hi) =>
+          TextAnalysis.compressionRatio(col(textCol)).between(lo, hi) })
+        .filter(col(langCol).isin(cfg.langs: _*))
+        .withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
+
+      // 5.5 optional DSIR gate: keep documents whose hashed-unigram
+      // importance score says they look like the target subset; the score
+      // frame carries (id, long) only, survivors re-attach by semi join
+      val selected = cfg.dsirGate.fold(gated) { case (target, minAvg) =>
+        val keep = TextAnalysis.dsirScore(gated, idCol, textCol, target)
+          .filter(col("avg_logw") >= minAvg)
+          .select(col(idCol))
+        gated.join(keep, Seq(idCol), "left_semi")
+      }
+
+      // 6. optional corpus shaping: language rebalance, then token budget
+      val mixed = cfg.mixTarget.fold(selected)(t =>
+        Sampling.temperatureMix(selected, col(idCol), col(langCol), t))
+      val bounded = cfg.tokenBudget.fold(mixed)(b =>
+        Sampling.takeUntilBudget(mixed, col(idCol),
+          TextAnalysis.qualityScore(col(textCol)),
+          TextAnalysis.tokenCountWs(col(textCol)), b))
+
+      // 6.5 optional epoch upsampling: mixture weights as repeat counts;
+      // kept languages missing from the spec default to 1.0 (the raw
+      // operator's absent-means-drop convention is for full mixture specs,
+      // not the capstone's additive override)
+      val repeated = cfg.epochWeights.fold(bounded) { w =>
+        val full = cfg.langs.map(l => l -> w.getOrElse(l, 1.0)).toMap ++ w
+        Sampling.epochUpsample(bounded, col(idCol), col(langCol), full)
+      }
+
+      // 7. split assignment (hashes the id: every copy of a doc lands in
+      // the same split — repeats never leak across train/val)
+      val out = repeated.withColumn("split",
+        Sampling.splitAssign(col(idCol), cfg.splits, cfg.splitSalt))
+
+      // 8. working-set release: with the cache on, EAGERLY materialize the
+      // curated output (one localCheckpoint job — by this point the dedup
+      // stages' internal actions already harvested the cache's block
+      // re-reads), and the scope frees the working set. The eager copy is
+      // increment-sized (the knob's documented scope) and is reclaimed
+      // when the caller drops the frame; downstream consumers
+      // (curateIncrement's dedupAgainst, the writers) read its blocks
+      // instead of re-running the chain.
+      if (cfg.cacheWorkingSet) out.localCheckpoint(true) else out
     }
-
-    // 3. decontamination: drop docs overlapping the held-out benchmark.
-    // Bloom-prefiltered: the clean majority never reaches the join
-    val contaminated = Dedup.bloomContamination(uniq, benchmark, idCol, textCol)
-      .filter(col("n_overlap") > cfg.maxBenchmarkOverlap)
-      .select(col("doc_id").as(idCol))
-    val decon = uniq.join(contaminated, Seq(idCol), "left_anti")
-
-    // 3.5 optional cross-document passage dedup: doc-level dedup above
-    // removed whole near-duplicates; this removes the SPANS that still
-    // repeat across surviving docs (boilerplate, license blocks). The
-    // cleaned text re-attaches by id join (narrow cols ride the join,
-    // the rebuilt text comes from the dedup side); scrubbed-empty docs
-    // drop here so later stages never see token-less rows
-    val clean = cfg.passageDedupWindow.fold(decon) { w =>
-      val scrubbed = Dedup.removeDuplicatePassages(decon, idCol, textCol, w)
-        .filter(col("n_tokens") > col("n_removed"))
-        .select(col(idCol), col("clean_text").as(textCol))
-      decon.drop(textCol).join(scrubbed, Seq(idCol))
-    }
-
-    // 4-5. narrow tail: quality gates, PII scrub
-    val gated = clean
-      .filter(TextAnalysis.qualityScore(col(textCol)) >= cfg.minQuality)
-      .filter(TextAnalysis.duplicateNgramRatio(col(textCol), 3) <= cfg.maxDup3Ratio)
-      .filter(TextAnalysis.topTokenFraction(col(textCol)) <= cfg.maxTopTokenFraction)
-      .filter(cfg.compressionBand.fold(lit(true)) { case (lo, hi) =>
-        TextAnalysis.compressionRatio(col(textCol)).between(lo, hi) })
-      .filter(col(langCol).isin(cfg.langs: _*))
-      .withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
-
-    // 5.5 optional DSIR gate: keep documents whose hashed-unigram
-    // importance score says they look like the target subset; the score
-    // frame carries (id, long) only, survivors re-attach by semi join
-    val selected = cfg.dsirGate.fold(gated) { case (target, minAvg) =>
-      val keep = TextAnalysis.dsirScore(gated, idCol, textCol, target)
-        .filter(col("avg_logw") >= minAvg)
-        .select(col(idCol))
-      gated.join(keep, Seq(idCol), "left_semi")
-    }
-
-    // 6. optional corpus shaping: language rebalance, then token budget
-    val mixed = cfg.mixTarget.fold(selected)(t =>
-      Sampling.temperatureMix(selected, col(idCol), col(langCol), t))
-    val bounded = cfg.tokenBudget.fold(mixed)(b =>
-      Sampling.takeUntilBudget(mixed, col(idCol),
-        TextAnalysis.qualityScore(col(textCol)),
-        TextAnalysis.tokenCountWs(col(textCol)), b))
-
-    // 6.5 optional epoch upsampling: mixture weights as repeat counts;
-    // kept languages missing from the spec default to 1.0 (the raw
-    // operator's absent-means-drop convention is for full mixture specs,
-    // not the capstone's additive override)
-    val repeated = cfg.epochWeights.fold(bounded) { w =>
-      val full = cfg.langs.map(l => l -> w.getOrElse(l, 1.0)).toMap ++ w
-      Sampling.epochUpsample(bounded, col(idCol), col(langCol), full)
-    }
-
-    // 7. split assignment (hashes the id: every copy of a doc lands in
-    // the same split — repeats never leak across train/val)
-    val out = repeated.withColumn("split",
-      Sampling.splitAssign(col(idCol), cfg.splits, cfg.splitSalt))
-
-    // 8. working-set release: with the cache on, EAGERLY materialize the
-    // curated output (one localCheckpoint job — by this point the dedup
-    // stages' internal actions already harvested the cache's block
-    // re-reads) and unpersist the working set here and now. Without
-    // this, every curate() call left a corpus-text MEMORY_AND_DISK copy
-    // resident until clearCache/app exit — on a many-job session the
-    // accumulated copies squeezed the unified pool into spill churn
-    // (the r15 pass-2 decay). The eager copy is increment-sized (the
-    // knob's documented scope) and is reclaimed when the caller drops
-    // the frame; downstream consumers (curateIncrement's dedupAgainst,
-    // the writers) read its blocks instead of re-running the chain.
-    if (cfg.cacheWorkingSet) {
-      val materialized = out.localCheckpoint(true)
-      canon.unpersist(blocking = false)
-      materialized
-    } else out
   }
 
   /** Incremental curation — "today's crawl against the standing corpus",

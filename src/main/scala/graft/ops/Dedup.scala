@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.FrameScope
 import scala.util.hashing.MurmurHash3
 
 /** Deduplication operators (SURVEY.md §2.9 extension surface).
@@ -179,34 +180,23 @@ object Dedup {
     * Shingle sets are never persisted and never computed corpus-wide:
     * at scale they are ~3× the text bytes, so the r11 knob's
     * persist-everything shape would park a corpus-sized frame in the
-    * cache. [[nearDupDedup]]/[[nearDupDedupBy]] release the cached
-    * frames deterministically once the component fixpoint has
-    * materialized. */
+    * cache. The signature persist and the candidate checkpoint are
+    * freed before the call returns the eagerly materialized pair list
+    * (id pairs + jaccard, metadata-sized at any corpus). */
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.8,
                           bands: Int = 32, rowsPerBand: Int = 3,
                           shingleN: Int = 3,
-                          maxBucketSize: Int = 10000): DataFrame = {
-    val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, bands, rowsPerBand, shingleN, maxBucketSize)
-    // SELF-RELEASING: eagerly materialize the pair list (id pairs +
-    // jaccard — metadata-sized at any corpus) and free the signature
-    // persist + candidate checkpoint here and now. A Dataset-level
-    // persist is held by the session's CacheManager with a STRONG
-    // reference — unlike checkpoint RDD blocks it is NEVER
-    // GC-reclaimable, so without this release every call would strand
-    // a signature-frame copy for the life of the session (the r15
-    // in-session decay: repeated bench executions squeezed the unified
-    // pool ~2× by pass 2).
-    val out = pairs.localCheckpoint(true)
-    release()
-    out
-  }
+                          maxBucketSize: Int = 10000): DataFrame =
+    FrameScope(df.sparkSession) { s =>
+      minhashNearDupPairsImpl(s, df, idCol, textCol, threshold, bands,
+        rowsPerBand, shingleN, maxBucketSize).localCheckpoint(true)
+    }
 
-  /** [[minhashNearDupPairs]] plus a `release` thunk that frees the
-    * cached signature frame and the candidate checkpoint — callable
-    * only after every consumer of the returned pairs has EAGERLY
-    * materialized (the candidate checkpoint's lineage is truncated).
+  /** [[minhashNearDupPairs]]'s lazy pair list, with the cached
+    * signature frame and the candidate checkpoint held by `scope` —
+    * every consumer of the pairs must materialize before the scope
+    * frees them (the candidate checkpoint's lineage is truncated).
     *
     * `edgesOnly = true` returns a CONNECTIVITY-EQUIVALENT edge set
     * instead of every near-dup pair: identical-text groups contribute a
@@ -221,10 +211,10 @@ object Dedup {
     * ([[nearDupDedup]], [[nearDupDedupBy]]) only need connectivity;
     * pair-list consumers (d02's graded output) keep the full form. */
   private[graft] def minhashNearDupPairsImpl(
-      df: DataFrame, idCol: String, textCol: String,
+      scope: FrameScope, df: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int, rowsPerBand: Int,
       shingleN: Int, maxBucketSize: Int,
-      edgesOnly: Boolean = false): (DataFrame, () => Unit) = {
+      edgesOnly: Boolean = false): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
 
     // Shuffle discipline, part 0: document bodies NEVER ride a shuffle.
@@ -236,10 +226,9 @@ object Dedup {
     // shuffle of raw text. The cost is recomputing the signature for
     // exact-duplicate rows instead of once per distinct text; duplicates
     // are a small fraction of a real corpus, raw text is not.
-    val sigs = base.select(col("id"), md5(col("text")).as("fp"),
+    val sigs = scope.persist(base.select(col("id"), md5(col("text")).as("fp"),
       graft.functions.MinhashBandsExpression.minhashBands(
-        col("text"), bands, rowsPerBand, shingleN).as("bands"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("text"), bands, rowsPerBand, shingleN).as("bands")))
 
     // Degenerate-corpus hardening, part 1: collapse exact-identical texts
     // FIRST (fingerprint groupBy — Catalyst prunes `bands` off this
@@ -312,15 +301,13 @@ object Dedup {
     // candidate set feeds BOTH the verify scan's semi-filter and the
     // pair probe — without materialization the band self-join would
     // execute per consumer. Candidates are bounded (band-collision rep
-    // pairs after the oversized-bucket cap); released by the Impl
-    // caller's thunk, or on GC.
-    val candidates = buckets.alias("a").join(buckets.alias("b"),
+    // pairs after the oversized-bucket cap).
+    val candidates = scope.checkpoint(buckets.alias("a").join(buckets.alias("b"),
         col("a.band") === col("b.band") &&
         col("a.bhash") === col("b.bhash") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .localCheckpoint(false)
+      .dropDuplicates("id_a", "id_b"))
 
     // Eagerly materialize the lazy checkpoint via count(): the
     // materialization job was already part of this operator's job
@@ -390,13 +377,8 @@ object Dedup {
         .select(least(col("ea"), col("eb")).as("id_a"),
           greatest(col("ea"), col("eb")).as("id_b"), col("jaccard"))
 
-    val pairs = expanded.unionByName(intra)
+    expanded.unionByName(intra)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    val release: () => Unit = { () =>
-      sigs.unpersist(blocking = false)
-      org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(candidates)
-    }
-    (pairs, release)
   }
 
   // ---- connected components over near-dup pairs ----------------------------
@@ -420,89 +402,84 @@ object Dedup {
                           maxIter: Int = 25): DataFrame = {
     // ≥ 1: the loop's first round is what materializes the lazy edge /
     // label checkpoints — with zero rounds the returned frame would
-    // reference blocks the final unpersist below already truncated
+    // reference blocks the scope frees on exit
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    // LAZY checkpoint (r18, was eager): the first round's label-sum job
-    // materializes the edge blocks en route — the eager variant spent a
-    // whole extra driver-synchronized job per call on data the next job
-    // re-read anyway. Parallel first-touch of a partition may compute it
-    // twice transiently (distinct is deterministic, so harmless); every
-    // later round reads blocks.
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    // Lazy checkpoints throughout the loop: the label-sum aggregate right
-    // after each checkpoint is the action that materializes it, so every
-    // round costs ONE Spark job (materialize + sum fused), not two. With
-    // eager checkpoints the loop ran 2 jobs/round and the fixed job
-    // overhead dominated wall time at every scale.
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .select(col("id"), col("id").as("component"))
-      .localCheckpoint(false)
-    // Convergence via the label-sum invariant: each round's per-node label
-    // is min(old label, ...), so the sum of labels is non-increasing and
-    // stalls exactly at the fixpoint — one aggregate (which doubles as the
-    // lazy checkpoint's materializing action) instead of a full old⋈new
-    // join per round.
-    // Decimal sum: node ids are unbounded at scale, so a Long sum of 10^12
-    // labels could wrap and fake a stall.
-    // A NULL sum means either an EMPTY label frame (a corpus with no
-    // near-dups — legitimate, treated as zero so the loop converges
-    // immediately) or NON-NUMERIC ids whose decimal cast nulled out —
-    // which must fail loudly: silently treating it as zero would fake
-    // convergence after one round and return wrong components.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val row = df.agg(
-        sum(col("component").cast("decimal(38,0)")).as("s"),
-        count(lit(1)).as("n"),
-        // non-null casts: must equal n, or SOME id is non-numeric and the
-        // sum is blind to it (mixed numeric/string ids on a non-ANSI
-        // session would otherwise fake convergence; ANSI throws earlier)
-        count(col("component").cast("decimal(38,0)")).as("cast_ok")).head
-      require(row.getLong(2) == row.getLong(1),
-        "connectedComponents requires numeric node ids (the decimal cast " +
-          s"nulled ${row.getLong(1) - row.getLong(2)} of ${row.getLong(1)} labels)")
-      Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+    FrameScope(pairs.sparkSession) { s =>
+      // LAZY checkpoint (r18, was eager): the first round's label-sum job
+      // materializes the edge blocks en route — the eager variant spent a
+      // whole extra driver-synchronized job per call on data the next job
+      // re-read anyway. Parallel first-touch of a partition may compute it
+      // twice transiently (distinct is deterministic, so harmless); every
+      // later round reads blocks.
+      val edges = s.checkpoint(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+        .distinct())
+      // Lazy checkpoints throughout the loop: the label-sum aggregate right
+      // after each checkpoint is the action that materializes it, so every
+      // round costs ONE Spark job (materialize + sum fused), not two. With
+      // eager checkpoints the loop ran 2 jobs/round and the fixed job
+      // overhead dominated wall time at every scale.
+      var labels = s.checkpoint(edges.select(col("src").as("id"))
+        .distinct()
+        .select(col("id"), col("id").as("component")))
+      // Convergence via the label-sum invariant: each round's per-node label
+      // is min(old label, ...), so the sum of labels is non-increasing and
+      // stalls exactly at the fixpoint — one aggregate (which doubles as the
+      // lazy checkpoint's materializing action) instead of a full old⋈new
+      // join per round.
+      // Decimal sum: node ids are unbounded at scale, so a Long sum of 10^12
+      // labels could wrap and fake a stall.
+      // A NULL sum means either an EMPTY label frame (a corpus with no
+      // near-dups — legitimate, treated as zero so the loop converges
+      // immediately) or NON-NUMERIC ids whose decimal cast nulled out —
+      // which must fail loudly: silently treating it as zero would fake
+      // convergence after one round and return wrong components.
+      def labelSum(df: DataFrame): java.math.BigDecimal = {
+        val row = df.agg(
+          sum(col("component").cast("decimal(38,0)")).as("s"),
+          count(lit(1)).as("n"),
+          // non-null casts: must equal n, or SOME id is non-numeric and the
+          // sum is blind to it (mixed numeric/string ids on a non-ANSI
+          // session would otherwise fake convergence; ANSI throws earlier)
+          count(col("component").cast("decimal(38,0)")).as("cast_ok")).head
+        require(row.getLong(2) == row.getLong(1),
+          "connectedComponents requires numeric node ids (the decimal cast " +
+            s"nulled ${row.getLong(1) - row.getLong(2)} of ${row.getLong(1)} labels)")
+        Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+      }
+      // The INITIAL label sum is skipped (r18: one driver-synchronized job
+      // saved per call): round 1 strictly decreases the sum whenever any
+      // edge exists (for every edge (a,b) the larger endpoint's label
+      // drops to ≤ min(a,b)), so comparing round 1 against the initial
+      // sum could only ever converge on an edgeless frame — which now
+      // converges at round 2 on 0 == 0 instead, one extra no-op round on
+      // empty frames. All other rounds compare k vs k-1 exactly as
+      // before; min-label propagation is idempotent at the fixpoint, so
+      // the result is identical either way.
+      var prevSum: java.math.BigDecimal = null
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val viaEdges = edges
+          .join(labels.withColumnRenamed("id", "src"), "src")
+          .select(col("dst").as("id"), col("component"))
+        // pointer jump: my label's current label
+        val viaJump = labels.alias("l")
+          .join(labels.alias("m"), col("l.component") === col("m.id"))
+          .select(col("l.id").as("id"), col("m.component").as("component"))
+        val next = s.checkpoint(labels.unionByName(viaEdges).unionByName(viaJump)
+          .groupBy("id").agg(min(col("component")).as("component")))
+        val nextSum = labelSum(next)
+        // labelSum just materialized `next`: the previous round is dead
+        s.free(labels)
+        labels = next
+        converged = (prevSum != null) && nextSum.compareTo(prevSum) == 0
+        prevSum = nextSum
+        iter += 1
+      }
+      // materialized by its own labelSum; the scope frees the edge set
+      labels
     }
-    // The INITIAL label sum is skipped (r18: one driver-synchronized job
-    // saved per call): round 1 strictly decreases the sum whenever any
-    // edge exists (for every edge (a,b) the larger endpoint's label
-    // drops to ≤ min(a,b)), so comparing round 1 against the initial
-    // sum could only ever converge on an edgeless frame — which now
-    // converges at round 2 on 0 == 0 instead, one extra no-op round on
-    // empty frames. All other rounds compare k vs k-1 exactly as
-    // before; min-label propagation is idempotent at the fixpoint, so
-    // the result is identical either way.
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val viaEdges = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("component"))
-      // pointer jump: my label's current label
-      val viaJump = labels.alias("l")
-        .join(labels.alias("m"), col("l.component") === col("m.id"))
-        .select(col("l.id").as("id"), col("m.component").as("component"))
-      val next = labels.unionByName(viaEdges).unionByName(viaJump)
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .localCheckpoint(false)
-      val nextSum = labelSum(next)
-      // labelSum just materialized `next`, so the previous round's blocks
-      // are dead — free them now rather than leaving one round's worth of
-      // storage per iteration for the async ContextCleaner
-      org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(labels)
-      labels = next
-      converged = (prevSum != null) && nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iter += 1
-    }
-    // the returned labels frame was materialized by its own labelSum; the
-    // edge set is no longer reachable from it
-    org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(edges)
-    labels
   }
 
   /** End-to-end near-duplicate corpus dedup: MinHash+LSH pairs →
@@ -510,23 +487,25 @@ object Dedup {
     * every row in no cluster). The complete "dedup my corpus" call. */
   def nearDupDedup(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8): DataFrame = {
-    // edgesOnly: dedup needs CONNECTIVITY, not the pair list — star +
-    // rep-level edges keep the components identical while staying linear
-    // in the duplication factor (the 100×-replicated-corpus probe OOM'd
-    // the fixpoint on the quadratic full pair set)
-    val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, 32, 3, 3, 10000, edgesOnly = true)
-    // connectedComponents EAGERLY materializes the pairs (its edge
-    // checkpoint) and returns a checkpoint-backed label frame, so the
-    // pair pipeline's cached signature frame and candidate checkpoint
-    // are dead the moment it returns — free them deterministically
-    // (zero cache residue for the end-to-end call)
-    val comps = connectedComponents(pairs, "id_a", "id_b")
-    release()
-    val losers = comps.filter(col("id") =!= col("component"))
+    val losers = nearDupComponents(df, idCol, textCol, threshold)
+      .filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
+
+  /** (id, component) of the near-dup pair graph. edgesOnly: dedup needs
+    * CONNECTIVITY, not the pair list — star + rep-level edges keep the
+    * components identical while staying linear in the duplication
+    * factor (the 100×-replicated-corpus probe OOM'd the fixpoint on the
+    * quadratic full pair set). The fixpoint materializes the pairs and
+    * returns a checkpoint-backed label frame, so the pair pipeline's
+    * frames are dead when it returns and the scope frees them. */
+  private def nearDupComponents(df: DataFrame, idCol: String, textCol: String,
+                                threshold: Double): DataFrame =
+    FrameScope(df.sparkSession) { s =>
+      connectedComponents(minhashNearDupPairsImpl(s, df, idCol, textCol,
+        threshold, 32, 3, 3, 10000, edgesOnly = true), "id_a", "id_b")
+    }
 
   /** [[nearDupDedup]] with SURVIVOR ELECTION: per near-dup cluster keep
     * the member maximizing `score` (ties → min id) instead of the min
@@ -541,13 +520,7 @@ object Dedup {
     * text never joins the election. */
   def nearDupDedupBy(df: DataFrame, idCol: String, textCol: String,
                      score: Column, threshold: Double = 0.8): DataFrame = {
-    // edgesOnly — see nearDupDedup: identical components, linear edges
-    val (pairs, release) = minhashNearDupPairsImpl(df, idCol, textCol,
-      threshold, 32, 3, 3, 10000, edgesOnly = true)
-    // see nearDupDedup: the fixpoint materializes the pairs; free the
-    // pair pipeline's cache blocks before the election runs
-    val comps = connectedComponents(pairs, "id_a", "id_b")
-    release()
+    val comps = nearDupComponents(df, idCol, textCol, threshold)
     // the explicit component repartition puts ONE canonically-identical
     // exchange under BOTH election consumers (the max aggregate and the
     // winners join), so the score projection — which may read document
@@ -832,70 +805,66 @@ object Dedup {
   def dedupAgainst(batch: DataFrame, prior: DataFrame,
                    idCol: String, textCol: String,
                    threshold: Double = 0.8, bands: Int = 32,
-                   rowsPerBand: Int = 3, shingleN: Int = 3): DataFrame = {
-    // All BATCH-side scan features come off ONE shared narrow projection
-    // (see [[narrowOf]]). The r10 shape instead re-derived features from
-    // `fresh` (the post-anti-join frame), so every consumer re-executed
-    // BOTH the batch scan and the prior fingerprint scan — 11 measured
-    // source reads; this shape reads the batch 4x and the prior 3x (d02
-    // parity).
-    //
-    // Only the BATCH side's narrow features are persisted: they are
-    // increment-sized, so the cache residue per call is bounded by one
-    // batch and released before returning. The PRIOR side is
-    // deliberately NOT persisted — it is corpus-sized, and the
-    // documented production pattern is to materialize its signature
-    // table once per corpus build externally, not to cache raw corpus
-    // text per increment.
-    val newNarrow = narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // build the cache NOW (the d19 discipline): the survivor-id job
-    // below starts its anti-join and band-join stages CONCURRENTLY, and
-    // two stages racing a cold cache each re-run the batch scan + kernel
-    // build; one count() makes every consumer a block read
-    newNarrow.count(): Unit
-    val oldNarrow = narrowOf(prior, idCol, textCol, bands, rowsPerBand, shingleN)
-    // stage 1: exact fingerprints — (fp, id) pairs only cross the wire
-    val priorFp = oldNarrow.select(col("fp")).distinct()
-    val freshIds = newNarrow.select(col("id"), col("fp"))
-      .join(priorFp, Seq("fp"), "left_anti")
-      .select(col("id"))
-    // stage 2: bipartite band join on (band, bhash) — the join moves
-    // (id, band, bhash) triples, never text or shingles. Deliberately
-    // NO freshIds semi-join here: banding ALL batch rows keeps every
-    // frame single-consumer (each source scan executes exactly once,
-    // no reliance on runtime exchange reuse), and is semantically
-    // identical — an exact-duplicate row's candidates only feed `drops`,
-    // and its id is excluded by the final freshIds semi-join regardless.
-    // The cost is verify work proportional to the exact-dup fraction,
-    // the same recompute-for-duplicates tradeoff d02 documents.
-    val newBands = newNarrow.select(col("id"),
-      posexplode(col("bands")).as(Seq("band", "bhash")))
-    val oldBands = oldNarrow.select(col("id").as("pid"),
+                   rowsPerBand: Int = 3, shingleN: Int = 3): DataFrame =
+    FrameScope(batch.sparkSession) { s =>
+      // All BATCH-side scan features come off ONE shared narrow projection
+      // (see [[narrowOf]]). The r10 shape instead re-derived features from
+      // `fresh` (the post-anti-join frame), so every consumer re-executed
+      // BOTH the batch scan and the prior fingerprint scan — 11 measured
+      // source reads; this shape reads the batch 4x and the prior 3x (d02
+      // parity).
+      //
+      // Only the BATCH side's narrow features are persisted: they are
+      // increment-sized, so the cache residue per call is bounded by one
+      // batch and freed before returning. The PRIOR side is
+      // deliberately NOT persisted — it is corpus-sized, and the
+      // documented production pattern is to materialize its signature
+      // table once per corpus build externally, not to cache raw corpus
+      // text per increment.
+      val newNarrow = s.persist(
+        narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN))
+      // build the cache NOW (the d19 discipline): the survivor-id job
+      // below starts its anti-join and band-join stages CONCURRENTLY, and
+      // two stages racing a cold cache each re-run the batch scan + kernel
+      // build; one count() makes every consumer a block read
+      newNarrow.count(): Unit
+      val oldNarrow = narrowOf(prior, idCol, textCol, bands, rowsPerBand, shingleN)
+      // stage 1: exact fingerprints — (fp, id) pairs only cross the wire
+      val priorFp = oldNarrow.select(col("fp")).distinct()
+      val freshIds = newNarrow.select(col("id"), col("fp"))
+        .join(priorFp, Seq("fp"), "left_anti")
+        .select(col("id"))
+      // stage 2: bipartite band join on (band, bhash) — the join moves
+      // (id, band, bhash) triples, never text or shingles. Deliberately
+      // NO freshIds semi-join here: banding ALL batch rows keeps every
+      // frame single-consumer (each source scan executes exactly once,
+      // no reliance on runtime exchange reuse), and is semantically
+      // identical — an exact-duplicate row's candidates only feed `drops`,
+      // and its id is excluded by the final freshIds semi-join regardless.
+      // The cost is verify work proportional to the exact-dup fraction,
+      // the same recompute-for-duplicates tradeoff d02 documents.
+      val newBands = newNarrow.select(col("id"),
         posexplode(col("bands")).as(Seq("band", "bhash")))
-    val cand = newBands.join(oldBands, Seq("band", "bhash"))
-      .select(col("id"), col("pid")).distinct()
-    // verify: shingle sets attach to the (small) candidate set only —
-    // the candidate side broadcasts, both shingle scans stream once
-    val newSh = newNarrow.select(col("id"), col("sh").as("sha"))
-    val oldSh = oldNarrow.select(col("id").as("pid"), col("sh").as("shb"))
-    val drops = cand.join(newSh, "id").join(oldSh, "pid")
-      .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
-      .select(col("id")).distinct()
-    // self-releasing: the survivor ID SET (id-sized, never text) is
-    // eagerly materialized, at which point the batch-side narrow cache
-    // is dead — free it before returning. The CacheManager holds
-    // Dataset persists with strong references (never GC-reclaimed), so
-    // without this release every increment call — including each
-    // streaming micro-batch — would strand a batch-narrow copy for the
-    // life of the session. The returned semi-join stays LAZY: the batch
-    // source re-streams once when the caller acts, and text never
-    // enters storage.
-    val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    newNarrow.unpersist(blocking = false)
-    batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
-  }
+      val oldBands = oldNarrow.select(col("id").as("pid"),
+          posexplode(col("bands")).as(Seq("band", "bhash")))
+      val cand = newBands.join(oldBands, Seq("band", "bhash"))
+        .select(col("id"), col("pid")).distinct()
+      // verify: shingle sets attach to the (small) candidate set only —
+      // the candidate side broadcasts, both shingle scans stream once
+      val newSh = newNarrow.select(col("id"), col("sh").as("sha"))
+      val oldSh = oldNarrow.select(col("id").as("pid"), col("sh").as("shb"))
+      val drops = cand.join(newSh, "id").join(oldSh, "pid")
+        .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
+        .select(col("id")).distinct()
+      // the survivor ID SET (id-sized, never text) is eagerly
+      // materialized, after which the scope frees the batch-side narrow
+      // cache. The returned semi-join stays LAZY: the batch source
+      // re-streams once when the caller acts, and text never enters
+      // storage.
+      val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
+        .localCheckpoint(true)
+      batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
+    }
 
   /** The narrow per-row features of the incremental dedup paths, off ONE
     * shared projection (the d02 discipline): id, exact md5 fingerprint,
@@ -990,73 +959,69 @@ object Dedup {
               s"increment passes $name=$expected — band hashes would " +
               "never match and near-duplicates would be silently missed")
     }
-    val newNarrow = narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newBands = newNarrow.select(col("id"),
-      posexplode(col("bands")).as(Seq("band", "bhash")))
-    // `count()` is the job that materializes the persisted narrow
-    // frame's cache AND yields the exact Bloom sizing (a Catalyst
-    // row-count estimate is off by orders of magnitude for narrow rows —
-    // LocalRelation strings are costed at a flat 20 bytes — and an
-    // undersized Bloom silently degrades to a pass-everything filter)
-    val nBatch = newNarrow.count()
-    if (nBatch == 0L) {
-      newNarrow.unpersist()
-      return batch.limit(0)
-    }
-    // null-text rows hash to a sentinel key (one extra Bloom entry,
-    // harmless) rather than NPE-ing the aggregate
-    val keyed = newNarrow.select(
-      coalesce(xxhash64(col("fp")), lit(0L)).as("fph"))
-    import org.apache.spark.util.sketch.BloomFilter
-    val fpBloom = graft.functions.BloomMightContainExpression.serialize(
-      keyed.rdd.treeAggregate(BloomFilter.create(nBatch, BloomFpp))(
-        seqOp = (acc, row) => { acc.putLong(row.getLong(0)); acc },
-        combOp = (a, b) => a.mergeInPlace(b)))
-    val priorFp = priorSigs.select(col("fp"))
-      .filter(graft.functions.BloomMightContainExpression.mightContain(
-        xxhash64(col("fp")), fpBloom))
-      .distinct()
-    val oldBands = priorSigs.select(col("id").as("pid"),
+    FrameScope(batch.sparkSession) { s =>
+      val newNarrow = s.persist(
+        narrowOf(batch, idCol, textCol, bands, rowsPerBand, shingleN))
+      val newBands = newNarrow.select(col("id"),
         posexplode(col("bands")).as(Seq("band", "bhash")))
-    val freshIds = newNarrow.select(col("id"), col("fp"))
-      .join(priorFp, Seq("fp"), "left_anti")
-      .select(col("id"))
-    // lazily checkpointed: the candidate set feeds BOTH the standing-text
-    // semi-join and the verify join — without materialization the band
-    // join (and its two scans) would execute twice. Candidates are
-    // bounded (band-collision pairs of an increment); released below
-    val cand = newBands.join(oldBands, Seq("band", "bhash"))
-      .select(col("id"), col("pid")).distinct()
-      .localCheckpoint(false)
-    // materialize the checkpoint NOW via count() (the job the first
-    // consumer would have run anyway) — the exact pair count gates the
-    // broadcast hint below, the d02 conditional-broadcast discipline
-    val nCandPairs = cand.count()
-    val newSh = newNarrow.select(col("id"), col("sh").as("sha"))
-    // the ONE standing-text scan: candidate pids semi-filter the scan
-    // BEFORE the shingle kernel runs, so only candidate docs pay it —
-    // broadcast-hinted while the measured candidate count stays within
-    // MaxBroadcastCandidatePairs (an unhinted semi would shuffle the
-    // full standing-corpus text projection)
-    val oldSh = priorText.select(col(idCol).as("pid"), col(textCol))
-      .join(maybeBroadcast(cand.select(col("pid")).distinct(), nCandPairs),
-        Seq("pid"), "left_semi")
-      .select(col("pid"), shingleCol(col(textCol), shingleN).as("shb"))
-    val drops = cand.join(newSh, "id").join(oldSh, "pid")
-      .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
-      .select(col("id")).distinct()
-    // self-releasing (the dedupAgainst discipline): eagerly materialize
-    // the id-sized survivor set, then free the batch-narrow persist AND
-    // the candidate checkpoint — a streaming session runs this once per
-    // micro-batch, and without the release each batch would strand a
-    // CacheManager-held copy for the life of the stream. The returned
-    // semi-join stays lazy; text never enters storage.
-    val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
-      .localCheckpoint(true)
-    newNarrow.unpersist(blocking = false)
-    org.apache.spark.sql.graftbridge.CheckpointBridge.unpersist(cand)
-    batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
+      // `count()` is the job that materializes the persisted narrow
+      // frame's cache AND yields the exact Bloom sizing (a Catalyst
+      // row-count estimate is off by orders of magnitude for narrow rows —
+      // LocalRelation strings are costed at a flat 20 bytes — and an
+      // undersized Bloom silently degrades to a pass-everything filter)
+      val nBatch = newNarrow.count()
+      if (nBatch == 0L) batch.limit(0)
+      else {
+        // null-text rows hash to a sentinel key (one extra Bloom entry,
+        // harmless) rather than NPE-ing the aggregate
+        val keyed = newNarrow.select(
+          coalesce(xxhash64(col("fp")), lit(0L)).as("fph"))
+        import org.apache.spark.util.sketch.BloomFilter
+        val fpBloom = graft.functions.BloomMightContainExpression.serialize(
+          keyed.rdd.treeAggregate(BloomFilter.create(nBatch, BloomFpp))(
+            seqOp = (acc, row) => { acc.putLong(row.getLong(0)); acc },
+            combOp = (a, b) => a.mergeInPlace(b)))
+        val priorFp = priorSigs.select(col("fp"))
+          .filter(graft.functions.BloomMightContainExpression.mightContain(
+            xxhash64(col("fp")), fpBloom))
+          .distinct()
+        val oldBands = priorSigs.select(col("id").as("pid"),
+            posexplode(col("bands")).as(Seq("band", "bhash")))
+        val freshIds = newNarrow.select(col("id"), col("fp"))
+          .join(priorFp, Seq("fp"), "left_anti")
+          .select(col("id"))
+        // lazily checkpointed: the candidate set feeds BOTH the standing-text
+        // semi-join and the verify join — without materialization the band
+        // join (and its two scans) would execute twice. Candidates are
+        // bounded (band-collision pairs of an increment)
+        val cand = s.checkpoint(newBands.join(oldBands, Seq("band", "bhash"))
+          .select(col("id"), col("pid")).distinct())
+        // materialize the checkpoint NOW via count() (the job the first
+        // consumer would have run anyway) — the exact pair count gates the
+        // broadcast hint below, the d02 conditional-broadcast discipline
+        val nCandPairs = cand.count()
+        val newSh = newNarrow.select(col("id"), col("sh").as("sha"))
+        // the ONE standing-text scan: candidate pids semi-filter the scan
+        // BEFORE the shingle kernel runs, so only candidate docs pay it —
+        // broadcast-hinted while the measured candidate count stays within
+        // MaxBroadcastCandidatePairs (an unhinted semi would shuffle the
+        // full standing-corpus text projection)
+        val oldSh = priorText.select(col(idCol).as("pid"), col(textCol))
+          .join(maybeBroadcast(cand.select(col("pid")).distinct(), nCandPairs),
+            Seq("pid"), "left_semi")
+          .select(col("pid"), shingleCol(col(textCol), shingleN).as("shb"))
+        val drops = cand.join(newSh, "id").join(oldSh, "pid")
+          .filter(jaccardCol(col("sha"), col("shb")) >= threshold)
+          .select(col("id")).distinct()
+        // the id-sized survivor set is eagerly materialized, after which
+        // the scope frees the batch-narrow persist and the candidate
+        // checkpoint. The returned semi-join stays lazy; text never
+        // enters storage.
+        val keepIds = freshIds.join(drops, Seq("id"), "left_anti")
+          .localCheckpoint(true)
+        batch.join(keepIds.select(col("id").as(idCol)), Seq(idCol), "left_semi")
+      }
+    }
   }
 
   /** False-positive rate of [[dedupAgainstSignatures]]' batch-side

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.graftbridge.FrameScope
 
 /** Graph centrality over edge lists — the link-graph side of corpus
   * curation (PageRank-style quality priors for web-crawl corpora, as in
@@ -15,6 +15,13 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * lineage flat so round k doesn't replay rounds 1..k-1.
   */
 object Graph {
+
+  /** Distinct (src, dst) edges with both ends non-null, held by `s`. */
+  private def edgeSet(s: FrameScope, edges: DataFrame, srcCol: String,
+                      dstCol: String): DataFrame =
+    s.checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+      .distinct())
 
   /** PageRank by power iteration with damping:
     *
@@ -47,67 +54,52 @@ object Graph {
     require(iters >= 0, s"iters must be non-negative: $iters")
     require(damping >= 0.0 && damping < 1.0,
       s"damping must be in [0, 1): $damping")
-    val spark = edges.sparkSession
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(false)
-    val n = nodes.count()
-    if (n == 0)
-      return e.select(col("src").as("id"), lit(0.0).as("rank")).limit(0)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    // rounds since (and including) the last eager checkpoint; all of them
-    // are provably materialized and superseded once the next eager round
-    // completes, so they free right there instead of at loop exit
-    var pending: List[DataFrame] = Nil
-    for (i <- 1 to iters) {
-      // rank mass on dangling nodes (no out-edges): a one-row aggregate
-      // broadcast into the round's projection. coalesce: sum over an
-      // empty anti-join is NULL = no dangling mass. The expression tree
-      // mirrors the old driver arithmetic exactly —
-      // ((1−d)/n + (d·dangling)/n) + d·coalesce(contrib, 0) — same IEEE
-      // ops in the same order, so ranks are bit-identical to the
-      // collect-per-round formulation (GraphSpec pins rank sums; the
-      // d11 oracle pins every value).
-      val dangling = ranks.join(outdeg, ranks("id") === outdeg("src"),
-          "left_anti")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("_dang"))
-      val share = ranks.join(outdeg, ranks("id") === outdeg("src"))
-        .select(col("src").as("sid"), (col("rank") / col("deg")).as("share"))
-      val contrib = e.join(share, e("src") === col("sid"))
-        .select(col("dst").as("id"), col("share").as("c"))
-        .groupBy("id").agg(sum("c").as("contrib"))
-      // every CheckpointEvery-th round (and the final one) checkpoints
-      // EAGERLY: its action cascade-materializes the lazy rounds behind
-      // it, after which those frames are superseded and freed on the
-      // spot — peak storage stays ≤ CheckpointEvery rank frames
-      val eager = i == iters || i % CheckpointEvery == 0
-      ranks = nodes
-        .join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"),
-          ((lit((1.0 - damping) / n)
-            + lit(damping) * col("_dang") / lit(n.toDouble))
-            + lit(damping) * coalesce(col("contrib"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint(eager)
-      if (eager) {
-        pending.foreach(CheckpointBridge.unpersist)
-        pending = List(ranks)
-      } else pending = pending :+ ranks
+    FrameScope(edges.sparkSession) { s =>
+      val e = edgeSet(s, edges, srcCol, dstCol)
+      val nodes = s.checkpoint(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id")))
+        .distinct())
+      val n = nodes.count()
+      if (n == 0) edges.select(col(srcCol).as("id"), lit(0.0).as("rank")).limit(0)
+      else {
+        val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+        var ranks = nodes.withColumn("rank", lit(1.0 / n))
+        for (i <- 1 to iters) {
+          // rank mass on dangling nodes (no out-edges): a one-row aggregate
+          // broadcast into the round's projection. coalesce: sum over an
+          // empty anti-join is NULL = no dangling mass. The expression tree
+          // mirrors the old driver arithmetic exactly —
+          // ((1−d)/n + (d·dangling)/n) + d·coalesce(contrib, 0) — same IEEE
+          // ops in the same order, so ranks are bit-identical to the
+          // collect-per-round formulation (GraphSpec pins rank sums; the
+          // d11 oracle pins every value).
+          val dangling = ranks.join(outdeg, ranks("id") === outdeg("src"),
+              "left_anti")
+            .agg(coalesce(sum("rank"), lit(0.0)).as("_dang"))
+          val share = ranks.join(outdeg, ranks("id") === outdeg("src"))
+            .select(col("src").as("sid"), (col("rank") / col("deg")).as("share"))
+          val contrib = e.join(share, e("src") === col("sid"))
+            .select(col("dst").as("id"), col("share").as("c"))
+            .groupBy("id").agg(sum("c").as("contrib"))
+          // every CheckpointEvery-th round (and the final one) checkpoints
+          // EAGERLY: its action cascade-materializes the lazy rounds behind
+          // it, after which those frames are superseded and freed on the
+          // spot — peak storage stays ≤ CheckpointEvery rank frames
+          val eager = i == iters || i % CheckpointEvery == 0
+          ranks = s.checkpoint(nodes
+            .join(contrib, Seq("id"), "left")
+            .crossJoin(broadcast(dangling))
+            .select(col("id"),
+              ((lit((1.0 - damping) / n)
+                + lit(damping) * col("_dang") / lit(n.toDouble))
+                + lit(damping) * coalesce(col("contrib"), lit(0.0)))
+                .as("rank")), eager)
+          if (eager) s.retain(e, nodes, ranks)
+        }
+        // zero rounds: the start frame reads `nodes`, which the scope frees
+        if (iters == 0) ranks.localCheckpoint(true) else ranks
+      }
     }
-    if (iters >= 1) {
-      // pending holds only the final (returned) frame here — every
-      // superseded round was freed at its eager checkpoint
-      CheckpointBridge.unpersist(e)
-      CheckpointBridge.unpersist(nodes)
-    }
-    ranks
   }
 
   /** HITS hubs & authorities (Kleinberg 1999): auth(v) = Σ_{u→v} hub(u),
@@ -122,70 +114,61 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 10): DataFrame = {
     require(iters >= 0, s"iters must be non-negative: $iters")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(false)
-    val n = nodes.count()
-    if (n == 0)
-      return e.select(col("src").as("id"), lit(0.0).as("hub"),
-        lit(0.0).as("auth")).limit(0)
-    var scores = nodes.withColumn("hub", lit(1.0 / n))
-      .withColumn("auth", lit(1.0 / n))
-    def normalized(df: DataFrame, c: String, total: Double): DataFrame =
-      if (total == 0.0) df else df.withColumn(c, col(c) / lit(total))
-    def scalarSum(df: DataFrame, c: String): Double =
-      df.agg(sum(c)).collect()(0) match {
-        case r if r.isNullAt(0) => 0.0
-        case r => r.getDouble(0)
+    FrameScope(edges.sparkSession) { s =>
+      val e = edgeSet(s, edges, srcCol, dstCol)
+      val nodes = s.checkpoint(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id")))
+        .distinct())
+      val n = nodes.count()
+      if (n == 0)
+        edges.select(col(srcCol).as("id"), lit(0.0).as("hub"), lit(0.0).as("auth"))
+          .limit(0)
+      else {
+        var scores = nodes.withColumn("hub", lit(1.0 / n))
+          .withColumn("auth", lit(1.0 / n))
+        def normalized(df: DataFrame, c: String, total: Double): DataFrame =
+          if (total == 0.0) df else df.withColumn(c, col(c) / lit(total))
+        def scalarSum(df: DataFrame, c: String): Double =
+          df.agg(sum(c)).collect()(0) match {
+            case r if r.isNullAt(0) => 0.0
+            case r => r.getDouble(0)
+          }
+        // Each half-round's UN-normalized frame is checkpointed and its
+        // normalizer sum is the action that materializes it — the frame
+        // then has 2-3 consumers (the opposite half-round, the round's
+        // output) that re-read BLOCKS instead of re-executing the
+        // join+agg chain. Without the checkpoint those consumers
+        // recomputed the auth chain up to 4× per round (lazy plans fan
+        // out, Spark shares nothing across actions). Superseded frames
+        // are freed as soon as their single downstream materializes, as
+        // in pageRank.
+        for (i <- 1 to iters) {
+          val auth2 = e.join(scores.select(col("id"), col("hub")),
+              e("src") === col("id"))
+            .groupBy(col("dst").as("aid")).agg(sum("hub").as("auth"))
+          val authRaw = s.checkpoint(nodes.join(auth2, nodes("id") === col("aid"), "left")
+            .select(nodes("id"), coalesce(col("auth"), lit(0.0)).as("auth")))
+          val aTot = scalarSum(authRaw, "auth") // materializes authRaw (and scores_{i-1})
+          // scores_{i-1}'s only consumer was auth2; the previous round's
+          // raw frames fed scores_{i-1}'s now-complete materialization
+          s.retain(e, nodes, scores, authRaw)
+          val withAuth = normalized(authRaw, "auth", aTot)
+          val hub2 = e.join(withAuth.select(col("id").as("aid"), col("auth")),
+              e("dst") === col("aid"))
+            .groupBy(col("src").as("hid")).agg(sum("auth").as("hub"))
+          val hubRaw = s.checkpoint(nodes
+            .join(hub2, nodes("id") === col("hid"), "left")
+            .select(nodes("id"), coalesce(col("hub"), lit(0.0)).as("hub")))
+          val hTot = scalarSum(hubRaw, "hub") // materializes hubRaw
+          scores = s.checkpoint(normalized(hubRaw, "hub", hTot)
+            .join(withAuth.withColumnRenamed("id", "_aid2"),
+              col("id") === col("_aid2"))
+            .select(col("id"), col("hub"), col("auth")), i == iters)
+        }
+        // zero rounds: the start frame reads `nodes`, which the scope frees
+        if (iters == 0) scores.localCheckpoint(true) else scores
       }
-    // Each half-round's UN-normalized frame is checkpointed and its
-    // normalizer sum is the action that materializes it — the frame then
-    // has 2-3 consumers (the opposite half-round, the round's output)
-    // that re-read BLOCKS instead of re-executing the join+agg chain.
-    // Without the checkpoint those consumers recomputed the auth chain up
-    // to 4× per round (lazy plans fan out, Spark shares nothing across
-    // actions). Superseded frames are freed as soon as their single
-    // downstream materializes, as in pageRank.
-    var prevRound: List[DataFrame] = Nil
-    for (i <- 1 to iters) {
-      val auth2 = e.join(scores.select(col("id"), col("hub")),
-          e("src") === col("id"))
-        .groupBy(col("dst").as("aid")).agg(sum("hub").as("auth"))
-      val authRaw = nodes.join(auth2, nodes("id") === col("aid"), "left")
-        .select(nodes("id"), coalesce(col("auth"), lit(0.0)).as("auth"))
-        .localCheckpoint(false)
-      val aTot = scalarSum(authRaw, "auth") // materializes authRaw (and scores_{i-1})
-      // scores_{i-1}'s only consumer was auth2; the previous round's raw
-      // frames fed scores_{i-1}'s now-complete materialization — all dead
-      prevRound.foreach(CheckpointBridge.unpersist)
-      prevRound = (if (i == 1) Nil else List(scores)) :+ authRaw
-      val withAuth = normalized(authRaw, "auth", aTot)
-      val hub2 = e.join(withAuth.select(col("id").as("aid"), col("auth")),
-          e("dst") === col("aid"))
-        .groupBy(col("src").as("hid")).agg(sum("auth").as("hub"))
-      val hubRaw = nodes
-        .join(hub2, nodes("id") === col("hid"), "left")
-        .select(nodes("id"), coalesce(col("hub"), lit(0.0)).as("hub"))
-        .localCheckpoint(false)
-      val hTot = scalarSum(hubRaw, "hub") // materializes hubRaw
-      prevRound = prevRound :+ hubRaw
-      scores = normalized(hubRaw, "hub", hTot)
-        .join(withAuth.withColumnRenamed("id", "_aid2"),
-          col("id") === col("_aid2"))
-        .select(col("id"), col("hub"), col("auth"))
-        .localCheckpoint(i == iters)
     }
-    if (iters >= 1) {
-      prevRound.foreach(CheckpointBridge.unpersist)
-      CheckpointBridge.unpersist(e)
-      CheckpointBridge.unpersist(nodes)
-    }
-    scores
   }
 
   /** Min-hop BFS levels from a seed set — the recursive-CTE reachability
@@ -208,57 +191,37 @@ object Graph {
                 seeds: DataFrame, seedCol: String,
                 maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative: $maxHops")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(false)
-    var visited = seeds.select(col(seedCol).as("id"))
-      .filter(col("id").isNotNull).distinct()
-      .withColumn("level", lit(0))
-      .localCheckpoint(false)
-    var frontier = visited
-    // superseded-round frames, freed once the round AFTER them has
-    // materialized (the pageRank discipline); reference-guarded because
-    // round 0 aliases frontier and visited
-    var prevVisited: DataFrame = null
-    var prevFrontier: DataFrame = null
-    var hop = 1
-    // count()==0, not isEmpty (r19): on a LAZY localCheckpoint frame,
-    // isEmpty's executeTake(1) job computes only the partitions the take
-    // touches and the checkpoint machinery then launches a SECOND job
-    // for the missing partitions (LocalRDDCheckpointData.doCheckpoint);
-    // count() computes every partition in the one job — emptiness test
-    // and full materialization share a single driver action per hop
-    var drained = frontier.count() == 0L
-    while (hop <= maxHops && !drained) {
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("level", lit(hop))
-        .localCheckpoint(false)
-      // the count materializes `next` (and, through the anti-join, the
-      // current visited checkpoint) — the round before last is provably
-      // dead
-      drained = next.count() == 0L
-      if (drained) CheckpointBridge.unpersist(next)
-      else {
-        if (prevFrontier ne null) CheckpointBridge.unpersist(prevFrontier)
-        if ((prevVisited ne null) && (prevVisited ne prevFrontier))
-          CheckpointBridge.unpersist(prevVisited)
-        prevFrontier = frontier
-        prevVisited = visited
-        visited = visited.union(next).localCheckpoint(false)
-        frontier = next
-        hop += 1
+    FrameScope(edges.sparkSession) { s =>
+      val e = edgeSet(s, edges, srcCol, dstCol)
+      var visited = s.checkpoint(seeds.select(col(seedCol).as("id"))
+        .filter(col("id").isNotNull).distinct()
+        .withColumn("level", lit(0)))
+      var frontier = visited
+      var hop = 1
+      // count()==0, not isEmpty (r19): on a LAZY localCheckpoint frame,
+      // isEmpty's executeTake(1) job computes only the partitions the take
+      // touches and the checkpoint machinery then launches a SECOND job
+      // for the missing partitions (LocalRDDCheckpointData.doCheckpoint);
+      // count() computes every partition in the one job — emptiness test
+      // and full materialization share a single driver action per hop
+      var drained = frontier.count() == 0L
+      while (hop <= maxHops && !drained) {
+        val next = s.checkpoint(frontier.join(e, frontier("id") === e("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(visited, Seq("id"), "left_anti")
+          .withColumn("level", lit(hop)))
+        // the count materializes `next` (and, through the anti-join, the
+        // current visited checkpoint) — every older round is dead
+        drained = next.count() == 0L
+        if (drained) s.free(next)
+        else {
+          s.retain(e, frontier, visited, next)
+          visited = s.checkpoint(visited.union(next))
+          frontier = next
+          hop += 1
+        }
       }
+      visited.localCheckpoint(true) // eager: every held frame is dead after it
     }
-    val out = visited.localCheckpoint(true) // eager: inputs freeable now
-    val live = Seq(prevFrontier, prevVisited, frontier, visited)
-      .filter(_ ne null)
-    live.zipWithIndex
-      .filter { case (df, i) => live.take(i).forall(_ ne df) } // ref-dedup
-      .foreach { case (df, _) => CheckpointBridge.unpersist(df) }
-    CheckpointBridge.unpersist(e)
-    out
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge
+import org.apache.spark.sql.graftbridge.FrameScope
 
 import graft.functions.XPathExtractExpression.extractXpath
 
@@ -59,88 +59,80 @@ object Sitemaps {
     */
   def expand(roots: DataFrame, docs: DataFrame, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val corpus = docs.select(col("url").as("sitemap"), col("xml"))
-    // classification pass: both whole-document extractions in ONE select
-    // so the fusion rule batches them into a single DOM parse, and the
-    // LAZY CHECKPOINT doubles as an optimizer barrier — without it,
-    // Catalyst pushes the `_is_index` filters below this project as
-    // standalone extract_xpath predicates, un-fusing the parse into one
-    // per consumer (measured ~3× the runtime). Checkpoint blocks are
-    // (url, bool, url-array) rows — never document bytes or entry
-    // fragments, so the residue stays url-table-sized at any corpus.
-    val classified = corpus.select(col("sitemap"),
-      (size(extractXpath(col("xml"), "/sm:sitemapindex", Ns)) > 0)
-        .as("_is_index"),
-      extractXpath(col("xml"), "/sm:sitemapindex/sm:sitemap/sm:loc", Ns)
-        .as("_children"))
-      .localCheckpoint(false)
-    val links = classified.filter(col("_is_index"))
-      .select(col("sitemap").as("_parent"),
-        explode(col("_children")).as("_child"))
-    // reachability over the link table only: depth-k frontier joins cost
-    // url-pair shuffles, no parsing
-    var frontier = roots.select(col("url").as("root"),
-      col("url").as("sitemap")).distinct()
-    val reach = Seq.newBuilder[DataFrame]
-    reach += frontier
-    for (_ <- 1 until maxDepth) {
-      frontier = frontier
-        .join(links, col("sitemap") === col("_parent"))
-        .select(col("root"), col("_child").as("sitemap"))
-        .distinct()
+    FrameScope(docs.sparkSession) { s =>
+      val corpus = docs.select(col("url").as("sitemap"), col("xml"))
+      // classification pass: both whole-document extractions in ONE select
+      // so the fusion rule batches them into a single DOM parse, and the
+      // LAZY CHECKPOINT doubles as an optimizer barrier — without it,
+      // Catalyst pushes the `_is_index` filters below this project as
+      // standalone extract_xpath predicates, un-fusing the parse into one
+      // per consumer (measured ~3× the runtime). Checkpoint blocks are
+      // (url, bool, url-array) rows — never document bytes or entry
+      // fragments, so the residue stays url-table-sized at any corpus.
+      val classified = s.checkpoint(corpus.select(col("sitemap"),
+        (size(extractXpath(col("xml"), "/sm:sitemapindex", Ns)) > 0)
+          .as("_is_index"),
+        extractXpath(col("xml"), "/sm:sitemapindex/sm:sitemap/sm:loc", Ns)
+          .as("_children")))
+      val links = classified.filter(col("_is_index"))
+        .select(col("sitemap").as("_parent"),
+          explode(col("_children")).as("_child"))
+      // reachability over the link table only: depth-k frontier joins cost
+      // url-pair shuffles, no parsing
+      var frontier = roots.select(col("url").as("root"),
+        col("url").as("sitemap")).distinct()
+      val reach = Seq.newBuilder[DataFrame]
       reach += frontier
+      for (_ <- 1 until maxDepth) {
+        frontier = frontier
+          .join(links, col("sitemap") === col("_parent"))
+          .select(col("root"), col("_child").as("sitemap"))
+          .distinct()
+        reach += frontier
+      }
+      val reachable = reach.result().reduce(_ unionByName _)
+        .distinct() // a diamond/cycle reaches a sitemap once, not per path
+      // entry pass: parse ONLY reachable non-index documents — the second
+      // and last time any document's bytes are parsed. MERGE hints: the
+      // corpus-derived sides carry xml/derived rows whose size Catalyst
+      // underestimates (synthesized strings vs parquet stats), and letting
+      // them broadcast serializes corpus-scale relation builds through the
+      // driver (measured 9× the wall at 10× data). Shuffling sitemap xml
+      // ONCE is the scale shape — sitemaps are crawl METADATA, a sliver of
+      // corpus bytes, and the entry parse consumes them right after.
+      val lazyOut = reachable
+        .join(classified.filter(!col("_is_index")).select(col("sitemap"))
+          .hint("merge"), Seq("sitemap"), "left_semi")
+        .join(corpus.hint("merge"), Seq("sitemap"))
+        .select(col("root"), col("sitemap"),
+          // to_text of each <url> node: the sitemaps.org XSD declares the
+          // children as an xs:sequence (loc, lastmod, changefreq,
+          // priority), so the space-joined descendant text is
+          // "loc [lastmod] [...]" — ONE document parse yields every
+          // entry, no per-fragment DOM re-parse (which was ~half the
+          // operator's cost). Shape-validated below, so a malformed entry
+          // degrades to a dropped row, never a mis-pairing: locs must
+          // look like absolute URLs, lastmod like a W3C datetime —
+          // changefreq/priority tokens match neither.
+          explode(extractXpath(col("xml"), "/sm:urlset/sm:url", Ns))
+            .as("entry"))
+        .select(col("root"), col("sitemap"),
+          split(col("entry"), " ").as("_toks"))
+        .select(col("root"), col("sitemap"),
+          when(element_at(col("_toks"), 1)
+              .rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"),
+            element_at(col("_toks"), 1)).as("loc"),
+          when(size(col("_toks")) >= 2 &&
+              element_at(col("_toks"), 2).rlike("^\\d{4}-\\d{2}-\\d{2}"),
+            element_at(col("_toks"), 2)).as("lastmod"))
+        .filter(col("loc").isNotNull)
+      // EAGER final materialization: the one action fills classified's
+      // blocks, every consumer (link table, non-index semi, entry parse)
+      // reads them inside the same job, and the scope then frees them.
+      // The operator's only residue is its own result — (root, sitemap,
+      // loc, lastmod) rows, crawl METADATA at a sliver of corpus bytes —
+      // reclaimed when the caller drops the frame.
+      lazyOut.localCheckpoint(true)
     }
-    val reachable = reach.result().reduce(_ unionByName _)
-      .distinct() // a diamond/cycle reaches a sitemap once, not per path
-    // entry pass: parse ONLY reachable non-index documents — the second
-    // and last time any document's bytes are parsed. MERGE hints: the
-    // corpus-derived sides carry xml/derived rows whose size Catalyst
-    // underestimates (synthesized strings vs parquet stats), and letting
-    // them broadcast serializes corpus-scale relation builds through the
-    // driver (measured 9× the wall at 10× data). Shuffling sitemap xml
-    // ONCE is the scale shape — sitemaps are crawl METADATA, a sliver of
-    // corpus bytes, and the entry parse consumes them right after.
-    val lazyOut = reachable
-      .join(classified.filter(!col("_is_index")).select(col("sitemap"))
-        .hint("merge"), Seq("sitemap"), "left_semi")
-      .join(corpus.hint("merge"), Seq("sitemap"))
-      .select(col("root"), col("sitemap"),
-        // to_text of each <url> node: the sitemaps.org XSD declares the
-        // children as an xs:sequence (loc, lastmod, changefreq,
-        // priority), so the space-joined descendant text is
-        // "loc [lastmod] [...]" — ONE document parse yields every
-        // entry, no per-fragment DOM re-parse (which was ~half the
-        // operator's cost). Shape-validated below, so a malformed entry
-        // degrades to a dropped row, never a mis-pairing: locs must
-        // look like absolute URLs, lastmod like a W3C datetime —
-        // changefreq/priority tokens match neither.
-        explode(extractXpath(col("xml"), "/sm:urlset/sm:url", Ns))
-          .as("entry"))
-      .select(col("root"), col("sitemap"),
-        split(col("entry"), " ").as("_toks"))
-      .select(col("root"), col("sitemap"),
-        when(element_at(col("_toks"), 1)
-            .rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"),
-          element_at(col("_toks"), 1)).as("loc"),
-        when(size(col("_toks")) >= 2 &&
-            element_at(col("_toks"), 2).rlike("^\\d{4}-\\d{2}-\\d{2}"),
-          element_at(col("_toks"), 2)).as("lastmod"))
-      .filter(col("loc").isNotNull)
-    // EAGER final materialization, then release the classification
-    // checkpoint here and now (the Graph.pageRank discipline): the one
-    // action fills classified's blocks, every consumer (link table,
-    // non-index semi, entry parse) reads them inside the same job, and
-    // afterwards they are provably dead — without the release, each
-    // expand() call stranded a corpus-classification RDD in executor
-    // storage until GC + ContextCleaner got around to it, which on a
-    // long-lived session (many-query bench JVM, a production cluster
-    // running curation jobs back to back) squeezed the unified pool and
-    // degraded every query that followed (the r15 x04 pass-2 18×).
-    // The operator's only residue is its own result — (root, sitemap,
-    // loc, lastmod) rows, crawl METADATA at a sliver of corpus bytes —
-    // reclaimed when the caller drops the frame.
-    val out = lazyOut.localCheckpoint(true)
-    CheckpointBridge.unpersist(classified)
-    out
   }
 }

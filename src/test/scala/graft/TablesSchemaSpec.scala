@@ -75,4 +75,26 @@ class TablesSchemaSpec extends SparkSpec {
     assert(fields("embeddings")("embedding").isInstanceOf[ArrayType],
       "embeddings.embedding must be an array column")
   }
+
+  test("the relation memo evicts stopped sessions before a live one") {
+    // keys stand for sessions; `stopped` for sparkContext.isStopped (a
+    // second, stoppable context cannot share this JVM with the suite's)
+    val stopped = scala.collection.mutable.Set.empty[String]
+    val lru = new Tables.SessionLru[String, Int](Tables.MaxSessions, stopped.contains)
+    lru.put("live", 0) // the least recently used entry from here on
+    for (i <- 1 to Tables.MaxSessions + 2) {
+      val k = s"s$i"
+      if (i % 2 == 0) stopped += k
+      lru.put(k, i)
+      assert(lru.size <= Tables.MaxSessions)
+    }
+    assert(lru.containsKey("live"), "a live memo must outlast stopped sessions")
+    assert(!lru.containsKey("s2") && !lru.containsKey("s4"))
+    // with no stopped session left, the bound still evicts the LRU
+    stopped.clear()
+    lru.keySet.removeIf(k => k != "live" && k.substring(1).toInt % 2 == 0)
+    while (lru.size < Tables.MaxSessions) lru.put(s"x${lru.size}", 0)
+    lru.put("newest", 0)
+    assert(!lru.containsKey("live") && lru.size == Tables.MaxSessions)
+  }
 }

@@ -3,8 +3,9 @@ package graft.marc
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The declarative `.rb` translation-map parser: constructs from the
-  * reference's test maps (translation_map_test.rb fixtures), loud
-  * failures on procedural Ruby, YAML round-trip. */
+  * reference's test maps (translation_map_test.rb fixtures, written by
+  * hand under test resources), loud failures on procedural Ruby, YAML
+  * round-trip. */
 class RbMapSpec extends AnyFunSuite {
 
   private val rubyMapStyle =
@@ -95,33 +96,25 @@ class RbMapSpec extends AnyFunSuite {
     assert(TranslationMap.fromRaw(loaded) == RbMap.toTranslationMap(rubyMapStyle))
   }
 
-  test("converts the reference's real declarative maps (country_map et al)") {
-    val fixtures = Seq(
-      "/root/reference/test/translation_maps/ruby_map.rb",
-      "/root/reference/test/translation_maps/both_map.rb",
-      "/root/reference/test/translation_maps/default_literal.rb",
-      "/root/reference/test/translation_maps/default_passthrough.rb",
-      "/root/reference/index_bench/translation_maps/ht/country_map.rb")
-      .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
-    assume(fixtures.nonEmpty, "reference fixtures not present")
-    for (p <- fixtures) {
-      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      val tm = RbMap.toTranslationMap(src)
-      assert(tm.entries.nonEmpty || tm.default.nonEmpty, s"empty map from $p")
+  test("converts declarative .rb maps from the classpath (country_map et al)") {
+    def source(name: String): String = {
+      val in = getClass.getClassLoader.getResourceAsStream(s"translation_maps/$name.rb")
+      assert(in != null, s"missing fixture translation_maps/$name.rb")
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
-    // spot semantics on the real country map
-    val cm = fixtures.find(_.toString.contains("country_map"))
-    cm.foreach { p =>
-      val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-      val tm = RbMap.toTranslationMap(src)
-      assert(tm.translateArray(Seq("us")) == Vector("United States"))
+    for (name <- Seq("ruby_map", "both_map", "default_literal",
+        "default_passthrough", "country_map")) {
+      val tm = RbMap.toTranslationMap(source(name))
+      assert(tm.entries.nonEmpty || tm.default.nonEmpty, s"empty map from $name")
     }
-    // and the reference's bad_ruby fixture must be rejected
-    val badPath = java.nio.file.Paths.get(
-      "/root/reference/test/translation_maps/bad_ruby.rb")
-    if (java.nio.file.Files.exists(badPath)) {
-      val src = new String(java.nio.file.Files.readAllBytes(badPath), "UTF-8")
-      intercept[IllegalArgumentException](RbMap.parse(src))
-    }
+    // spot semantics on the country map, through the named-map loader
+    assert(TranslationMap.named("country_map").translateArray(Seq("us")) ==
+      Vector("United States"))
+    assert(TranslationMap.named("default_literal").translateArray(Seq("key1", "zz")) ==
+      Vector("value1", "DEFAULT LITERAL"))
+    assert(TranslationMap.named("default_passthrough").translateArray(Seq("zz")) ==
+      Vector("zz"))
+    // and the bad_ruby fixture must be rejected
+    intercept[IllegalArgumentException](RbMap.parse(source("bad_ruby")))
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{QueryProfile, SparkSpec, Tables}
-import org.apache.spark.sql.graftbridge.ListenerBridge
+import org.apache.spark.sql.graftbridge.{FrameScope, ListenerBridge}
 import org.apache.spark.sql.functions._
 
 class OpsSpec extends SparkSpec {
@@ -494,12 +494,11 @@ class OpsSpec extends SparkSpec {
       (0 until k).map(i => (200L + i, base + " tail")) ++  // family B: k near-dups of A
       Seq((300L, "unrelated content about rivers and mountains and weather patterns"))
     ).toDF("doc_id", "text")
-    def comps(edgesOnly: Boolean): Map[Long, Long] = {
-      val (pairs, release) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
+    def comps(edgesOnly: Boolean): Map[Long, Long] = FrameScope(spark) { s =>
+      val pairs = Dedup.minhashNearDupPairsImpl(s, docs, "doc_id",
         "text", 0.5, 32, 3, 3, 10000, edgesOnly = edgesOnly)
-      val c = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
         .select("id", "component").as[(Long, Long)].collect().toMap
-      release(); c
     }
     val full = comps(edgesOnly = false)
     val star = comps(edgesOnly = true)
@@ -507,12 +506,11 @@ class OpsSpec extends SparkSpec {
     assert(full.keySet == ((100L until 100L + k) ++ (200L until 200L + k)).toSet)
     // and the edge COUNT is linear, not quadratic: full ≥ 2·C(k,2), star
     // ≤ 2(k-1) + rep-level cross pairs
-    val (fullPairs, r1) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
-      "text", 0.5, 32, 3, 3, 10000, edgesOnly = false)
-    val (starPairs, r2) = Dedup.minhashNearDupPairsImpl(docs, "doc_id",
-      "text", 0.5, 32, 3, 3, 10000, edgesOnly = true)
-    val nFull = fullPairs.count(); val nStar = starPairs.count()
-    r1(); r2()
+    def edges(edgesOnly: Boolean): Long = FrameScope(spark) { s =>
+      Dedup.minhashNearDupPairsImpl(s, docs, "doc_id",
+        "text", 0.5, 32, 3, 3, 10000, edgesOnly = edgesOnly).count()
+    }
+    val nFull = edges(edgesOnly = false); val nStar = edges(edgesOnly = true)
     assert(nFull >= 2L * k * (k - 1) / 2, s"full pair set should be quadratic: $nFull")
     assert(nStar <= 2L * (k - 1) + 4, s"star edge set must stay linear: $nStar")
   }
