@@ -198,16 +198,11 @@ object Dedup {
     * every consumer of the pairs must materialize before the scope
     * frees them (the candidate checkpoint's lineage is truncated).
     *
-    * `edgesOnly = true` returns a CONNECTIVITY-EQUIVALENT edge set
-    * instead of every near-dup pair: identical-text groups contribute a
-    * STAR (rep → member, n-1 edges) instead of C(n,2) pairs, and
-    * verified cross-group pairs stay at REP level instead of expanding
-    * |A|×|B|-way. Components are provably identical (members reach
-    * their rep, reps reach each other), but edge count is linear in the
-    * duplication factor instead of quadratic — on a corpus where every
-    * text occurs 100× (the replicated-crawl shape), the full pair set
-    * is ~10^4× larger and its components fixpoint ran out of aggregate
-    * memory at the 100× scale probe. Dedup/election consumers
+    * `edgesOnly = true` returns the CONNECTIVITY-EQUIVALENT edge set of
+    * [[Collapse.idPairs]] instead of every near-dup pair: on a corpus
+    * where every text occurs 100× (the replicated-crawl shape), the full
+    * pair set is ~10^4× larger and its components fixpoint ran out of
+    * aggregate memory at the 100× scale probe. Dedup/election consumers
     * ([[nearDupDedup]], [[nearDupDedupBy]]) only need connectivity;
     * pair-list consumers (d02's graded output) keep the full form. */
   private[graft] def minhashNearDupPairsImpl(
@@ -230,84 +225,29 @@ object Dedup {
       graft.functions.MinhashBandsExpression.minhashBands(
         col("text"), bands, rowsPerBand, shingleN).as("bands")))
 
-    // Degenerate-corpus hardening, part 1: collapse exact-identical texts
-    // FIRST (fingerprint groupBy — Catalyst prunes `bands` off this
-    // branch, so it shuffles (fp, id) pairs only). A corpus of N identical
-    // documents would otherwise put all N rows into the SAME bucket of
-    // every band — a single quadratic join cell. LSH sees one
-    // representative per distinct text; identical-text pairs (jaccard
-    // exactly 1.0) are emitted directly from the groups, and cross-group
-    // verified pairs expand back to group members at the end.
-    val groups = sigs
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(col("id"))).as("members"),
-        min(col("id")).as("rep_id"))
-
-    // all (a, b) with a < b inside an identical-text group; posexplode the
-    // left element first so the pair fan-out parallelizes across tasks
-    // instead of materializing C(n,2) from a single row. edgesOnly: the
-    // star (rep → member) — rep_id is the group MIN, so id_a < id_b holds
-    val intra =
-      if (edgesOnly)
-        groups.filter(size(col("members")) >= 2)
-          .select(col("rep_id").as("id_a"),
-            explode(col("members")).as("id_b"), lit(1.0).as("jaccard"))
-          .filter(col("id_a") =!= col("id_b"))
-      else groups.filter(size(col("members")) >= 2)
-        .select(posexplode(col("members")).as(Seq("ia", "id_a")), col("members"))
-        .repartition(col("id_a"))
-        .select(col("id_a"),
-          explode(slice(col("members"), col("ia") + lit(2), size(col("members")))).as("id_b"),
-          lit(1.0).as("jaccard"))
+    // Collapse identical texts by fingerprint (Catalyst prunes `bands`
+    // off this branch, so it shuffles (fp, id) pairs only): LSH sees one
+    // representative per distinct text, whose pairs carry jaccard 1.0.
+    val groups = Collapse.groups(sigs, Seq(col("fp")), col("id"))
 
     // Shuffle discipline: the band self-join moves ONLY (id, band, bhash)
     // triples — never the shingle arrays. Shingles are attached to just the
-    // deduplicated candidate pairs afterwards (two hash joins against a
-    // compact id→shingles frame). At 100 TB the band frame is ~rows×bands
-    // small fixed-width tuples; carrying document-sized arrays through that
-    // explode+join would multiply shuffle volume by the document size.
-    //
-    // Hardening, part 2: buckets that are still oversized after the exact
-    // collapse (a degenerate band hash over near-identical distinct texts)
-    // are dropped rather than joined quadratically — with 32 independent
-    // bands a true near-dup pair is overwhelmingly likely to meet in
-    // another, smaller bucket.
-    val repIds = groups.select(col("rep_id").as("id"))
-    val bucketsRaw = sigs.select(col("id"), col("bands"))
-      .join(repIds, Seq("id"), "left_semi") // moves (id, 32 ints), not text
-      .select(col("id"),
-        posexplode(col("bands")).as(Seq("band", "bhash")))
-    // Oversized buckets via groupBy, not count().over(Window): the window
-    // formulation shuffles AND sorts every (id, band, bhash) triple just
-    // to learn bucket sizes, while the groupBy partial-aggregates map-side
-    // (distinct keys per task cross the wire) and the surviving oversized
-    // set — normally empty, pathologically tiny — broadcasts into an
-    // anti-join. At 100 TB that removes a full sort of rows×bands triples.
-    val oversized = bucketsRaw.groupBy("band", "bhash")
-      .agg(count(lit(1)).as("bsize"))
-      .filter(col("bsize") > maxBucketSize)
-      .select(col("band"), col("bhash"))
-    // the explicit (band, bhash) repartition puts a canonically-identical
-    // exchange under BOTH sides of the self-join, so ReusedExchange
-    // executes `buckets` — and its band-kernel source scan — exactly
-    // once at any scale (without it, AQE's small-scale broadcast choice
-    // leaves one side exchange-free and the scan runs twice; at corpus
-    // scale the join shuffles anyway, so this forces that shape)
-    val buckets = bucketsRaw
-      .join(broadcast(oversized), Seq("band", "bhash"), "left_anti")
-      .repartition(col("band"), col("bhash"))
+    // deduplicated candidate pairs afterwards. Buckets still oversized
+    // after the collapse (a degenerate band hash over near-identical
+    // distinct texts) are dropped rather than joined quadratically — with
+    // 32 independent bands a true near-dup pair is overwhelmingly likely
+    // to meet in another, smaller bucket.
+    val buckets = Collapse.cap(sigs.select(col("id").as("gkey"), col("bands"))
+      .join(groups.select(col("gkey")), Seq("gkey"), "left_semi") // (id, 32 ints), not text
+      .select(col("gkey"), posexplode(col("bands")).as(Seq("band", "bhash"))),
+      Seq("band", "bhash"), maxBucketSize)
 
     // Lazily checkpointed (the dedupAgainstSignatures shape): the
     // candidate set feeds BOTH the verify scan's semi-filter and the
     // pair probe — without materialization the band self-join would
     // execute per consumer. Candidates are bounded (band-collision rep
     // pairs after the oversized-bucket cap).
-    val candidates = scope.checkpoint(buckets.alias("a").join(buckets.alias("b"),
-        col("a.band") === col("b.band") &&
-        col("a.bhash") === col("b.bhash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .dropDuplicates("id_a", "id_b"))
+    val candidates = scope.checkpoint(Collapse.groupPairs(buckets, Seq("band", "bhash"))())
 
     // Eagerly materialize the lazy checkpoint via count(): the
     // materialization job was already part of this operator's job
@@ -344,40 +284,27 @@ object Dedup {
     // exception to the "document bodies never ride a shuffle" rule,
     // because the alternative is an unbounded driver-side relation.
     val candIds = candidates
-      .select(explode(array(col("id_a"), col("id_b"))).as("id"))
+      .select(explode(array(col("ga"), col("gb"))).as("id"))
       .distinct()
     val shingled = base
       .join(maybeBroadcast(candIds, nCandPairs), Seq("id"), "left_semi")
       .select(col("id"), shingleCol(col("text"), shingleN).as("sh"))
 
     val repPairs = candidates
-      .select(col("id_a"), col("id_b"),
-        explode(array(col("id_a"), col("id_b"))).as("id"))
+      .select(col("ga"), col("gb"), explode(array(col("ga"), col("gb"))).as("id"))
       .join(shingled, "id")
-      .groupBy("id_a", "id_b")
+      .groupBy("ga", "gb")
       .agg(
-        first(when(col("id") === col("id_a"), col("sh")), ignoreNulls = true)
+        first(when(col("id") === col("ga"), col("sh")), ignoreNulls = true)
           .as("sh_a"),
-        first(when(col("id") === col("id_b"), col("sh")), ignoreNulls = true)
+        first(when(col("id") === col("gb"), col("sh")), ignoreNulls = true)
           .as("sh_b"))
       .withColumn("jaccard", jaccardCol(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("ga"), col("gb"), col("jaccard"))
 
-    // expand representative pairs to every member pair of the two groups
-    // (edgesOnly: rep-level pairs suffice — members connect via stars)
-    val gm = groups.select(col("rep_id"), col("members"))
-    val expanded =
-      if (edgesOnly) repPairs
-      else repPairs
-        .join(gm.select(col("rep_id").as("id_a"), col("members").as("ma")), "id_a")
-        .join(gm.select(col("rep_id").as("id_b"), col("members").as("mb")), "id_b")
-        .select(explode(col("ma")).as("ea"), col("mb"), col("jaccard"))
-        .select(col("ea"), explode(col("mb")).as("eb"), col("jaccard"))
-        .select(least(col("ea"), col("eb")).as("id_a"),
-          greatest(col("ea"), col("eb")).as("id_b"), col("jaccard"))
-
-    expanded.unionByName(intra)
+    Collapse.idPairs(repPairs, groups, groups.withColumn("jaccard", lit(1.0)),
+        "jaccard", edgesOnly)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
   }
 
@@ -1126,91 +1053,28 @@ object Dedup {
     * banding core shared by the text ([[simhashNearDupPairs]]) and
     * binary-payload ([[Multimodal.binaryNearDupPairs]]) paths. Same
     * scale shape either way: candidates meet only on equal
-    * (chunk-index, chunk-value) — an equi-join, never a cross join —
-    * and only (id, sig, chunk) triples shuffle.
-    *
-    * Identical-signature collapse (the [[Similarity.cosineNearDupPairs]]
-    * rationale with a scalar key): chunking, the chunk self-join, the
-    * global (ga, gb) dedup, and the hamming verification all run per
-    * DISTINCT signature; member-id lists expand only at the very end.
-    * On a duplicated corpus (a crawled image set IS one) the old per-id
-    * form generated candidate rows QUADRATIC in the duplication factor
-    * (d copies of one signature co-bucket in every chunk → d²·chunks
-    * rows into the dedup shuffle — mm07 measured 90 s at sf10 on
-    * exactly this). The OUTPUT is still every qualifying id pair —
-    * quadratic in the duplication by the operator's definition — but
-    * it is produced by exploding bounded member lists, not shuffled.
-    *
-    * Precondition: ids are unique. A duplicate id row with a DIFFERENT
-    * signature lives in two groups; since r18's filter-before-dedup
-    * order, a (ga, gb) pair reachable through both is kept if ANY
-    * reachable sig pair is within distance, with ONE arbitrary
-    * qualifying distance retained by the dropDuplicates (the pre-r18
-    * form kept one arbitrary sig pair's verdict, qualifying or not). */
+    * (chunk-index, chunk-value) — an equi-join, never a cross join — and
+    * run per distinct signature ([[Collapse]]); only (id, sig, chunk)
+    * triples shuffle. Precondition: ids are unique. */
   def simhashPairsFromSigs(sigs: DataFrame, maxDistance: Int): DataFrame = {
-    // one row per distinct signature; barrier: feeds chunking (both
-    // sides of the self-join via the shared exchange) and both
-    // expansions — without it the signature subtree (and its kernel
-    // source scan) would execute once per consumer
-    val groups = sigs
-      .groupBy(col("sig"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .withColumn("gkey", element_at(col("ids"), 1))
-      .localCheckpoint(false)
-    // the explicit (ci, cv) repartition puts a canonically-identical
-    // exchange under BOTH sides of the chunk self-join, so ReusedExchange
-    // executes the chunking subtree exactly once at any scale (the
-    // d02/d13 discipline; without it AQE's small-scale broadcast choice
-    // leaves one side exchange-free and the subtree runs twice)
+    // barrier: feeds chunking (both sides of the self-join via the
+    // shared exchange), the member-list joins and the within-group pairs
+    // — without it the signature subtree (and its kernel source scan)
+    // would execute once per consumer
+    val groups = Collapse.groups(sigs, Seq(col("sig")), col("id")).localCheckpoint(false)
     val buckets = groups.select(col("gkey"), col("sig"),
       posexplode(array(simhashChunkCols(col("sig"), maxDistance): _*)).as(Seq("ci", "cv")))
-      .repartition(col("ci"), col("cv"))
-    // cross-group: verify once per distinct signature pair, then expand
-    // to id pairs (groups are disjoint over unique ids, so least/greatest
-    // orients each pair exactly once; equal-id pairs — duplicate input
-    // ids meeting across groups — drop, as the old a.id < b.id form did).
-    // Duplicate-id precondition violation (unique ids documented): with
-    // the filter-first order below, a (ga, gb) pair is KEPT if ANY sig
-    // pair reachable through the duplicate id qualifies, and ONE
-    // arbitrary qualifying distance is retained by the dedup — the old
-    // dedup-first order kept one arbitrary sig pair's verdict instead.
-    // Distance filter BEFORE the (ga, gb) dedup (r18): the raw chunk
-    // join is the skew hot spot — narrow chunk values over correlated
+    // verified before the pair dedup: narrow chunk values over correlated
     // payload bytes co-bucket aggressively (mm06's corpus: 4.58M raw
-    // pairs from 4,946 signatures at 8-bit chunks, of which only 7,230
-    // distinct pairs survive the distance cut). bit_count(a^b) is a
-    // per-row scalar, so verifying first costs one narrow pass, and the
-    // dedup exchange then carries only the qualifying (ga, gb,
-    // distance) triples — ≤ chunks× the surviving pairs — instead of
-    // millions of pre-verify rows with both signatures aboard. Result
-    // set is identical: distance is a pure function of the pair, so
-    // filter∘dedup ≡ dedup∘filter (bench: mm06 5.3 s → ~1 s at sf0.1).
-    val gpairs = buckets.alias("a").join(buckets.alias("b"),
-        col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-        col("a.gkey") < col("b.gkey"))
-      .select(col("a.gkey").as("ga"), col("b.gkey").as("gb"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("distance"))
-      .filter(col("distance") <= maxDistance)
-      .dropDuplicates("ga", "gb")
-    val vids = groups.select(col("gkey"), col("ids"))
-    val cross = gpairs
-      .join(vids.select(col("gkey").as("ga"), col("ids").as("ids_a")), "ga")
-      .join(vids.select(col("gkey").as("gb"), col("ids").as("ids_b")), "gb")
-      .select(explode(col("ids_a")).as("a"), col("ids_b"), col("distance"))
-      .select(col("a"), explode(col("ids_b")).as("b"), col("distance"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("id_a"),
-        greatest(col("a"), col("b")).as("id_b"), col("distance"))
-    // within-group: identical signatures share every chunk of every
-    // table, so the old form always co-bucketed them; the distance is
-    // COMPUTED by the same bit_count(a ^ b) the old per-pair verify
-    // evaluated (= 0 ≤ maxDistance), never assumed
-    val within = groups.filter(size(col("ids")) >= 2)
-      .withColumn("distance", bit_count(col("sig").bitwiseXOR(col("sig"))))
-      .select(explode(col("ids")).as("id_a"), col("ids"), col("distance"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"), col("distance"))
-      .filter(col("id_a") < col("id_b"))
-    cross.unionByName(within)
+    // pairs from 4,946 signatures at 8-bit chunks, 7,230 within distance)
+    val gpairs = Collapse.groupPairs(buckets, Seq("ci", "cv"))(
+      _.withColumn("distance", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+        .filter(col("distance") <= maxDistance))
+    // within-group distance is COMPUTED by the same bit_count(a ^ b) as
+    // the cross-group verify (= 0 ≤ maxDistance), never assumed
+    Collapse.idPairs(gpairs, groups,
+      groups.withColumn("distance", bit_count(col("sig").bitwiseXOR(col("sig")))),
+      "distance")
   }
 
   /** Driver reference for [[graft.functions.BinarySimhashExpression]]
@@ -1251,12 +1115,7 @@ object Dedup {
     * bounded `levenshtein(l, r, k)` early-exits past the threshold.
     *
     * The quadratic comparison runs over DISTINCT (block, text) values,
-    * not rows — the [[minhashNearDupPairs]] exact-collapse discipline:
-    * corpora repeat strings heavily (planted dups, crawled mirrors), and
-    * d identical copies of a string would otherwise multiply every
-    * comparison involving it by d (d² for a pair of repeated strings).
-    * Verdicts are computed once per distinct name pair, then expanded
-    * back to id pairs by two equi-joins.
+    * not rows ([[Collapse]]); verdicts expand back to id pairs.
     *
     * Scale contract: comparisons per block are O(u²) in the DISTINCT
     * values per block — pick blocking keys that keep u bounded (brand,
@@ -1281,67 +1140,38 @@ object Dedup {
         "is an all-pairs cross join — at scale, block first)")
     val recs = df.select(blockCols.map(col) :+ col(idCol).as("_id") :+
       col(textCol).as("_t"): _*)
-    // one row per distinct (block, text) carrying its member-id list —
-    // the simhashPairsFromSigs collapse with a string key. The old tail
-    // joined the FULL n-row frame back twice, keyed on (block, text):
-    // every text string crossed two more shuffles and every verdict row
-    // fanned out through join-match expansion (d08's planted 100-way
-    // duplication measured 205 s at sf10 on exactly this). Here the
-    // verdict joins are u-sized and the quadratic-by-definition output
-    // is produced by exploding bounded member lists, not shuffled.
-    // Barrier: feeds the oversize audit, both self-join sides, and both
-    // expansion joins — without it the aggregate re-runs per consumer.
-    val members = recs
-      .groupBy(blockCols.map(col) :+ col("_t"): _*)
-      .agg(sort_array(collect_list(col("_id"))).as("_ids"))
+    // barrier: feeds the oversize cap, both self-join sides, the
+    // member-list joins and the within-group pairs — without it the
+    // aggregate re-runs per consumer
+    val groups = Collapse.groups(recs, blockCols.map(col) :+ col("_t"), col("_id"))
       .localCheckpoint(false)
-    // normally-empty, pathologically tiny: broadcasts into an anti-join
-    val oversized = members.groupBy(blockCols.map(col): _*)
-      .agg(count(lit(1)).as("_bsize"))
-      .filter(col("_bsize") > maxBlockSize)
-      .select(blockCols.map(col): _*)
-    val u = members.join(broadcast(oversized), blockCols, "left_anti")
-      .select(blockCols.map(col) :+ col("_t"): _*)
-    // unordered distinct name pairs: strictly-ordered pairs once each,
-    // plus the diagonal (equal names — dist 0 without a comparison)
-    val namePairs = u.select(blockCols.map(col) :+ col("_t").as("_ta"): _*)
-      .join(u.select(blockCols.map(col) :+ col("_t").as("_tb"): _*), blockCols)
-      .filter(col("_ta") <= col("_tb"))
-      .filter(abs(length(col("_ta")) - length(col("_tb"))) <= maxDist)
-      .withColumn("dist", when(col("_ta") === col("_tb"), lit(0))
-        .otherwise(levenshtein(col("_ta"), col("_tb"), maxDist)))
-      .filter(col("dist") >= 0) // bounded form returns -1 past the cap
-    // expand verdicts to id pairs via the member lists. A strict
-    // (na < nb) verdict yields each unordered id pair exactly once
-    // (normalized via least/greatest — the a-side id is NOT always the
-    // smaller); the diagonal yields each within-group pair once via
-    // id_a < id_b.
-    val expanded = namePairs
-      .join(members.select(blockCols.map(col) :+ col("_t").as("_ta") :+
-        col("_ids").as("ids_a"): _*), blockCols :+ "_ta")
-      .join(members.select(blockCols.map(col) :+ col("_t").as("_tb") :+
-        col("_ids").as("ids_b"): _*), blockCols :+ "_tb")
-      .select(col("_ta") === col("_tb"), col("ids_a"), col("ids_b"), col("dist"))
-      .toDF("_diag", "ids_a", "ids_b", "dist")
-      .select(col("_diag"), explode(col("ids_a")).as("a"), col("ids_b"), col("dist"))
-      .select(col("_diag"), col("a"), explode(col("ids_b")).as("b"), col("dist"))
-    expanded
-      .filter(when(col("_diag"), col("a") < col("b")).otherwise(lit(true)))
-      .select(least(col("a"), col("b")).as("id_a"),
-        greatest(col("a"), col("b")).as("id_b"), col("dist"))
+    val kept = Collapse.cap(groups, blockCols, maxBlockSize)
+    // a cheap length bound prunes before the bounded edit distance, which
+    // returns -1 past the cap
+    val gpairs = Collapse.groupPairs(kept.select(blockCols.map(col) :+
+        col("gkey") :+ col("_t"): _*), blockCols)(
+      _.filter(abs(length(col("_t_a")) - length(col("_t_b"))) <= maxDist)
+        .withColumn("dist", levenshtein(col("_t_a"), col("_t_b"), maxDist))
+        .filter(col("dist") >= 0))
+    // equal texts pair at dist 0 — except a null text or block key, which
+    // never equals anything (as in the self-join)
+    Collapse.idPairs(gpairs, groups,
+      kept.filter((col("_t") +: blockCols.map(col)).map(_.isNotNull).reduce(_ && _))
+        .withColumn("dist", lit(0)),
+      "dist")
   }
 
   /** The blocks [[fuzzyDupPairs]] would exclude at `maxBlockSize` —
     * (blockCols..., n_distinct) — the pre-run audit for re-blocking
-    * degenerate keys (the drop there is a recall cut, not a pruning). */
+    * degenerate keys (the drop there is a recall cut, not a pruning).
+    * The count is [[Collapse.oversized]]'s, the one `fuzzyDupPairs`
+    * caps with. */
   def fuzzyOversizedBlocks(df: DataFrame, textCol: String,
                            blockCols: Seq[String],
                            maxBlockSize: Int = 100000): DataFrame =
-    df.select(blockCols.map(col) :+ col(textCol).as("_t"): _*)
-      .distinct()
-      .groupBy(blockCols.map(col): _*)
-      .agg(count(lit(1)).as("n_distinct"))
-      .filter(col("n_distinct") > maxBlockSize)
+    Collapse.oversized(df.select(blockCols.map(col) :+ col(textCol).as("_t"): _*).distinct(),
+        blockCols, maxBlockSize)
+      .withColumnRenamed("n", "n_distinct")
 
   /** Cross-document duplicate-PASSAGE removal (the corpus-level exact
     * substring dedup of Lee et al. 2022, "Deduplicating Training Data

@@ -588,72 +588,38 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs (cos >= threshold), by LSH
     * bucketing + exact verification — the embedding-space analog of
-    * Dedup.minhashNearDupPairs.
-    *
-    * Identical-vector collapse (the [[collapsedTopK]] rationale):
-    * bucketing, the bucket self-join, and the exact verification all run
-    * per DISTINCT vector; member-id lists expand only at the very end.
-    * On a duplicated corpus the old per-id form generated candidate
-    * pairs quadratic in the duplication factor WITH two vectors attached
-    * to each (at sf10's 200-way duplication that filled 78 GB of sort
-    * spill and died); collapsed, only narrow id pairs are ever
-    * generated. The OUTPUT is still every qualifying id pair — quadratic
-    * in the duplication by definition of the operator — so the group id
-    * list (a collect_list bounded by the duplication factor) is the
-    * output's own requirement, not overhead. */
+    * Dedup.minhashNearDupPairs. Bucketing, the bucket self-join and the
+    * exact verification run per DISTINCT vector ([[Collapse]]). */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double = 0.95,
                          numPlanes: Int = 10, numTables: Int = 6,
                          dim: Int = 64): DataFrame = {
     requireIntegralId(df, idCol, "cosineNearDupPairs")
-    // one row per distinct vector; barrier: feeds bucketing, both sides
-    // of the verify join, and the within-group expansion
-    val groups = df
-      .groupBy(col(vecCol).cast("array<double>").as("v"))
-      .agg(sort_array(collect_list(col(idCol).cast("long"))).as("ids"))
-      .withColumn("gkey", element_at(col("ids"), 1))
-      .localCheckpoint(false)
+    // barrier: feeds bucketing, the member-list joins and the
+    // within-group pairs
+    val groups = Collapse.groups(df, Seq(col(vecCol).cast("array<double>").as("v")),
+      col(idCol).cast("long")).localCheckpoint(false)
     val bucketed = groups.select(col("gkey"),
       posexplode(allTableBuckets(col("v"), numPlanes, numTables, dim,
         seedBase = 137)).as(Seq("table", "bucket")))
-    val gpairs = bucketed.alias("a").join(bucketed.alias("b"),
-        col("a.table") === col("b.table") &&
-        col("a.bucket") === col("b.bucket") &&
-        col("a.gkey") < col("b.gkey"))
-      .select(col("a.gkey").as("ga"), col("b.gkey").as("gb"))
-      .dropDuplicates("ga", "gb")
-    // cross-group: verify once per distinct pair — vectors re-attach BY
-    // ID from the ORIGINAL frame (gkey is a real member id, and id-keyed
-    // joins broadcast from real source stats; the checkpointed groups
-    // frame has none, which would force vector payloads through a
-    // sort-merge) — then expand to oriented id pairs (groups are
-    // disjoint, so least/greatest orients each exactly once)
+    // verify once per distinct pair — vectors re-attach BY ID from the
+    // ORIGINAL frame (gkey is a real member id, and id-keyed joins
+    // broadcast from real source stats; the checkpointed groups frame
+    // has none, which would force vector payloads through a sort-merge)
     val dvecs = df.select(col(idCol).cast("long").as("gkey"),
       col(vecCol).cast("array<double>").as("v"))
-    val vids = groups.select(col("gkey"), col("ids"))
-    val cross = gpairs
+    val verified = Collapse.groupPairs(bucketed, Seq("table", "bucket"))()
       .join(dvecs.select(col("gkey").as("ga"), col("v").as("va")), "ga")
       .join(dvecs.select(col("gkey").as("gb"), col("v").as("vb")), "gb")
       .withColumn("cosine", cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select(col("ga"), col("gb"), col("cosine"))
-      .join(vids.select(col("gkey").as("ga"), col("ids").as("ids_a")), "ga")
-      .join(vids.select(col("gkey").as("gb"), col("ids").as("ids_b")), "gb")
-      .select(explode(col("ids_a")).as("a"), col("ids_b"), col("cosine"))
-      .select(col("a"), explode(col("ids_b")).as("b"), col("cosine"))
-      .select(least(col("a"), col("b")).as("id_a"),
-        greatest(col("a"), col("b")).as("id_b"), col("cosine"))
-    // within-group: every member pair of a duplicated vector (identical
-    // vectors share every bucket of every table, so the old form always
-    // co-bucketed them); the cosine is COMPUTED by the same (v, v)
-    // expression the old per-pair verify evaluated, never assumed 1.0
-    val within = groups.filter(size(col("ids")) >= 2)
-      .withColumn("cosine", cosine(col("v"), col("v")))
-      .filter(col("cosine") >= threshold)
-      .select(explode(col("ids")).as("id_a"), col("ids"), col("cosine"))
-      .select(col("id_a"), explode(col("ids")).as("id_b"), col("cosine"))
-      .filter(col("id_a") < col("id_b"))
-    cross.unionByName(within)
+    // within-group cosine is COMPUTED by the same (v, v) expression, never
+    // assumed 1.0: a zero vector scores 0 and does not pair with its copies
+    Collapse.idPairs(verified, groups,
+      groups.withColumn("cosine", cosine(col("v"), col("v")))
+        .filter(col("cosine") >= threshold),
+      "cosine")
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
 

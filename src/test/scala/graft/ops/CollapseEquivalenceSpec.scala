@@ -1,8 +1,9 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{QueryProfile, SparkSpec}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FrameScope
 
 /** Randomized equivalence pins for the identical-value collapses (r17's
   * ANN collapse, r18's simhash/fuzzy collapses) against the uncollapsed
@@ -150,6 +151,45 @@ class CollapseEquivalenceSpec extends SparkSpec {
       assert(sortedRows(got) == sortedRows(direct),
         s"dupMax=$dupMax: fuzzy pairs must equal the direct blocked scan")
       assert(got.count() > 0)
+    }
+  }
+
+  test("candidate work grows at most linearly with duplication") {
+    // the same distinct values at duplication factor 1 and 40. Collapsed,
+    // each added row adds a bounded number of shuffle-write records (it
+    // crosses the input repartition, the group aggregate, the within-group
+    // fan-out and a few id-keyed joins: 1.4 to 3.1 per row measured).
+    // Pairing ids directly puts d² rows per bucket into the self-join and
+    // the pair-dedup exchange: 27 (simhash) and 131 (minhash) per row
+    val rnd = new scala.util.Random(5L)
+    val texts = (0 until 30).flatMap { i =>
+      val t = Seq.fill(20)(s"w${rnd.nextInt(200)}").mkString(" ")
+      if (i % 3 == 0) Seq(t, t + " tail") else Seq(t) // near-dup partners
+    }
+    val vecs = texts.map(_ => Seq.fill(6)(rnd.nextGaussian()))
+    def corpus(dup: Int): DataFrame = (for {
+      (t, i) <- texts.zipWithIndex
+      c <- 0 until dup
+    } yield (i * 1000L + c, s"b${i % 3}", t, vecs(i)))
+      .toDF("id", "blk", "text", "vec").repartition(4)
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "simhash" -> (Dedup.simhashNearDupPairs(_, "id", "text", 3)),
+      "cosine" -> (Similarity.cosineNearDupPairs(_, "id", "vec", 0.9)),
+      "fuzzy" -> (Dedup.fuzzyDupPairs(_, "id", "text", Seq("blk"), 2)),
+      "minhash" -> (Dedup.minhashNearDupPairs(_, "id", "text", 0.5)),
+      "minhash edgesOnly" -> (df => FrameScope(spark) { s =>
+        Dedup.minhashNearDupPairsImpl(s, df, "id", "text", 0.5, 32, 3, 3,
+          10000, edgesOnly = true).localCheckpoint(true)
+      }))
+    val addedRows = 39L * texts.size
+    for ((name, op) <- ops) {
+      val Seq((n1, w1), (n40, w40)) = Seq(1, 40).map { dup =>
+        val (n, p) = QueryProfile.run(spark, s"dup$dup:$name")(op(corpus(dup)))(_.count())
+        (n, p.shuffleWriteRecords)
+      }
+      assert(n40 > n1, s"$name: duplication must add pairs ($n1 -> $n40)")
+      assert(w40 - w1 <= 8 * addedRows,
+        s"$name: shuffle-write records went $w1 -> $w40 for $addedRows added rows")
     }
   }
 }

@@ -28,6 +28,35 @@ class DegenerateInputsSpec extends SparkSpec {
     assert(Dedup.nearDupDedup(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.nearDupDedup(oneDoc, "doc_id", "text").count() == 1)
     assert(Dedup.simhashNearDupPairs(emptyDocs, "doc_id", "text").count() == 0)
+    val names = Seq.empty[(Long, String, String)].toDF("id", "blk", "name")
+    assert(Dedup.fuzzyDupPairs(names, "id", "name", Seq("blk"), 2).count() == 0)
+    assert(Dedup.fuzzyDupPairs(Seq((1L, "A", "hot gear")).toDF("id", "blk", "name"),
+      "id", "name", Seq("blk"), 2).count() == 0)
+    // a null block key equals nothing, not even itself: identical names
+    // under it do not pair
+    val nullBlock = Seq[(Long, String, String)]((1L, null, "hot gear"),
+      (2L, null, "hot gear"), (3L, null, "hot gears")).toDF("id", "blk", "name")
+    assert(Dedup.fuzzyDupPairs(nullBlock, "id", "name", Seq("blk"), 2).count() == 0)
+    val emptyMedia = Seq.empty[(Long, Array[Byte])].toDF("id", "payload")
+    assert(Multimodal.binaryNearDupPairs(emptyMedia, "id", "payload").count() == 0)
+    // empty input keeps the non-empty schema, or per-shard unions break
+    // exactly when one shard is empty
+    val someDocs = Seq((1L, "a b c d e"), (2L, "a b c d e")).toDF("doc_id", "text")
+    val someNames = Seq((1L, "A", "hot gear"), (2L, "A", "hot gears"))
+      .toDF("id", "blk", "name")
+    val media = Seq((1L, Array[Byte](1, 2, 3, 4, 5))).toDF("id", "payload")
+    for ((empty, full) <- Seq(
+        (Dedup.minhashNearDupPairs(emptyDocs, "doc_id", "text"),
+          Dedup.minhashNearDupPairs(someDocs, "doc_id", "text")),
+        (Dedup.simhashNearDupPairs(emptyDocs, "doc_id", "text"),
+          Dedup.simhashNearDupPairs(someDocs, "doc_id", "text")),
+        (Multimodal.binaryNearDupPairs(emptyMedia, "id", "payload"),
+          Multimodal.binaryNearDupPairs(media, "id", "payload")),
+        (Dedup.fuzzyDupPairs(names, "id", "name", Seq("blk"), 2),
+          Dedup.fuzzyDupPairs(someNames, "id", "name", Seq("blk"), 2)),
+        (Similarity.cosineNearDupPairs(emptyVecs, "vec_id", "embedding"),
+          Similarity.cosineNearDupPairs(someVecs, "vec_id", "embedding"))))
+      assert(empty.schema == full.schema, s"${empty.schema} vs ${full.schema}")
     assert(Dedup.exactDedup(emptyDocs, col("text"), col("doc_id")).count() == 0)
     assert(Dedup.repeatedSpans(emptyDocs, "doc_id", "text", minDocs = 2).count() == 0)
     assert(Dedup.ngramDocFreq(emptyDocs, "text", 2, 1).count() == 0)
